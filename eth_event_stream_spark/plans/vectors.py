@@ -394,9 +394,8 @@ def ivf_build_centroids(
     ``aggregate(zip_with(...))`` left fold — so argmin ties break
     identically (first index = smallest cid, matching min_by's
     (dist, cid) struct order); member sums are int64 of the same
-    HALF_UP ``round(x*1e6)`` (order-independent), with near-half values
-    fixed via decimal-on-repr, which reproduces Java's
-    BigDecimal(shortest-repr) rounding exactly; the final
+    HALF_UP ``round(x*1e6)`` (order-independent) via ``_half_up_micro``,
+    which reproduces Java's BigDecimal(shortest-repr) rounding exactly; the final
     sum/count/1e6 division happens in Spark in both forms."""
     import numpy as np
     import pyarrow as pa
@@ -430,20 +429,7 @@ def ivf_build_centroids(
                     diff = E[:, d, None] - C[None, :, d]
                     acc += diff * diff
                 assign = np.argmin(acc, axis=1)
-                V = E * 1e6
-                scaled = np.rint(V).astype(np.int64)  # half-to-even bulk
-                near_half = np.argwhere(
-                    np.abs(V - np.floor(V) - 0.5) < 1e-9
-                )
-                if near_half.size:  # exact HALF_UP on the rare suspects
-                    from decimal import ROUND_HALF_UP, Decimal
-
-                    for i, j in near_half:
-                        scaled[i, j] = int(
-                            Decimal(repr(V[i, j])).quantize(
-                                Decimal(1), rounding=ROUND_HALF_UP
-                            )
-                        )
+                scaled = _half_up_micro(E * 1e6)
                 psum = np.zeros((K, D), dtype=np.int64)
                 pcount = np.zeros(K, dtype=np.int64)
                 np.add.at(psum, assign, scaled)
@@ -824,11 +810,20 @@ def _sql_pq_search(rounds: int) -> str:
 def _half_up_micro(V):
     """int64 of Spark's ``ROUND(x, 0)`` (Java HALF_UP on the shortest
     decimal repr) applied to an ndarray: bulk ``np.rint`` (half-to-even),
-    then the rare exact-half suspects fixed with decimal-on-repr — the
-    same reproduction the ivf_build_centroids kernel carries inline,
-    pinned there by the near-half adversary gate."""
+    then the rare exact-half suspects fixed with decimal-on-repr. The one
+    copy of this rounding: the ivf_build_centroids Lloyd kernel and the PQ
+    refine/encode kernels all call it, pinned by the near-half adversary
+    gates.
+
+    NaN and ±Inf have no int64 value (the cast would turn NaN into
+    INT64_MIN, which then wins every argmin), so they raise ``ValueError``
+    instead."""
     import numpy as np
 
+    if not np.isfinite(V).all():
+        raise ValueError(
+            "_half_up_micro: NaN or infinite input has no int64 micro-unit value"
+        )
     scaled = np.rint(V).astype(np.int64)
     near_half = np.argwhere(np.abs(V - np.floor(V) - 0.5) < 1e-9)
     if near_half.size:
@@ -1021,8 +1016,10 @@ def vector_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ encode: every 64-dim vector compressed to PQ_M=8 codebook indices
     (8 bytes/vector instead of 256 — the memory step that makes
     billion-vector search fit a cluster). Static codebook from the PQ_K
-    seed vectors; assignment via broadcast join + min_by partial agg with
-    (dist, j) tie-breaks — deterministic, so DuckDB replays it exactly."""
+    seed vectors, carried on the driver; one ``mapInArrow`` pass assigns
+    every (vector, subspace) in NumPy by the integer argmin key
+    ``HALF_UP(dist * 1e6) * 16 + j`` (``_pq_codes``) — deterministic, so
+    DuckDB replays it exactly."""
     codes, _, _ = _pq_codes(spark, sf_dir)
     return codes.groupBy("vec_id").agg(
         F.transform(

@@ -9,8 +9,9 @@ Python ``DataSource`` over a log table (parquet) standing in for the chain:
   chunks still move the watermark, exactly the reference's punctuation
   (put_multiple end_block, sink.rs:253-263).
 - per-trigger advance is capped at ``block_step`` blocks (S2 chunking;
-  default 1000 = stream.rs:119), and each micro-batch splits into
-  one task per ``block_step`` range — Spark parallelizes what the
+  default 1000 = stream.rs:119), and every read — batch or micro-batch —
+  splits into one task per ``block_step`` range aligned to absolute
+  ``block_step`` multiples (``_chunks``) — Spark parallelizes what the
   reference fetches sequentially (stream.rs:214-226).
 - ``removed`` logs fail the read by default (S7 reorg policy,
   stream.rs:174-181); ``fail_on_removed=false`` drops them instead.
@@ -25,13 +26,21 @@ Two interchangeable transports behind the same options/semantics:
 ``path`` reads a parquet log table (the deterministic test stand-in), and
 ``rpc_url`` talks live JSON-RPC (``eth_getLogs`` per chunk +
 ``eth_blockNumber`` for the head — sources/rpc.py, the reference's real
-I/O). Chunking, pushdown, retry, and reorg policy are identical on both.
+I/O). Both readers share one read path: ``_Options`` parses the options
+once, ``_chunks`` cuts the range, ``_fetch_chunk`` runs one transport call
+under ``_with_retry`` (S6) and returns a ``pyarrow.Table``, and
+``_post_filter`` applies the address/topic0 re-check and the reorg policy
+with ``pyarrow.compute``. The chunk is cast to ``ETH_LOG_SCHEMA``'s Arrow
+form and handed to Spark as ``RecordBatch``es, so no row is ever a Python
+object on the parquet path.
 """
 
 from __future__ import annotations
 
+import functools
+import time
 from dataclasses import dataclass
-from typing import Iterator
+from typing import TYPE_CHECKING, Iterator
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -45,6 +54,7 @@ from pyspark.sql.datasource import (
     LessThan,
     LessThanOrEqual,
 )
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -62,6 +72,12 @@ from pyspark.sql.types import (
 # ModuleNotFoundError
 from .rpc import JsonRpcLogFetcher, TransientRpcError
 
+# pyarrow is imported where a chunk is read, not at module import: the
+# planner workers that unpickle the readers never touch Arrow data, and
+# importing pyarrow.compute and pyarrow.parquet adds ~34 MB of RSS to each
+if TYPE_CHECKING:
+    import pyarrow as pa
+
 ETH_LOG_SCHEMA = StructType(
     [
         StructField("address", StringType()),
@@ -75,6 +91,51 @@ ETH_LOG_SCHEMA = StructType(
 )
 
 _COLS = [f.name for f in ETH_LOG_SCHEMA.fields]
+
+
+@functools.cache
+def _arrow_schema() -> pa.Schema:
+    """ETH_LOG_SCHEMA in Arrow form. PySpark checks only the names and
+    count of returned RecordBatch columns, not their types, so every chunk
+    is cast to this before it leaves ``read``."""
+    return to_arrow_schema(ETH_LOG_SCHEMA)
+
+
+@dataclass(frozen=True)
+class _Options:
+    """The ``eth_logs`` options, parsed once for either reader."""
+
+    path: str | None
+    rpc_url: str | None
+    from_block: int
+    to_block: int | None
+    confirmations: int
+    block_step: int
+    address: str | None
+    topic0: str | None
+    fail_on_removed: bool
+    pushdown: bool
+    retry_attempts: int
+    retry_base_s: float
+
+    @classmethod
+    def parse(cls, options: dict) -> _Options:
+        if options.get("path") is None and options.get("rpc_url") is None:
+            raise ValueError("eth_logs source needs a 'path' or 'rpc_url' option")
+        return cls(
+            path=options.get("path"),
+            rpc_url=options.get("rpc_url"),
+            from_block=int(options.get("from_block", 0)),
+            to_block=int(options["to_block"]) if "to_block" in options else None,
+            confirmations=int(options.get("confirmation_blocks", 2)),
+            block_step=int(options.get("block_step", 1000)),
+            address=options.get("address"),
+            topic0=options.get("topic0"),
+            fail_on_removed=str(options.get("fail_on_removed", "true")).lower() == "true",
+            pushdown=str(options.get("pushdown", "false")).lower() == "true",
+            retry_attempts=int(options.get("retry_attempts", 4)),
+            retry_base_s=float(options.get("retry_base_ms", 10)) / 1000.0,
+        )
 
 
 @dataclass
@@ -98,214 +159,200 @@ class ReorgError(Exception):
     """A removed (reorged) log was observed below the confirmation frontier."""
 
 
+def _next_boundary(block: int, step: int) -> int:
+    """The first absolute ``step`` multiple above ``block``."""
+    return (block // step + 1) * step
+
+
+def _chunks(
+    lo: int, hi: int, step: int, address: str | None = None, address_exact: bool = False
+) -> list[BlockRangePartition]:
+    """Blocks [lo, hi) cut on absolute ``step`` multiples: the first chunk
+    may be short, every later one ends on a multiple. Alignment makes a
+    replayed read map exactly onto block-bucket partition overwrite
+    downstream (sinks.write_block_partitioned with bucket_blocks ==
+    block_step) — idempotent file output for free.
+
+    An empty range yields one empty sentinel chunk, never ``[]``: PySpark
+    substitutes ``[None]`` for an empty partition list and calls
+    ``read(None)``."""
+    if hi <= lo:
+        return [BlockRangePartition(lo, lo, address, address_exact)]
+    bounds = [lo, *range(_next_boundary(lo, step), hi, step), hi]
+    return [
+        BlockRangePartition(a, b, address, address_exact)
+        for a, b in zip(bounds, bounds[1:])
+    ]
+
+
 def _chain_head(path: str) -> int:
     """max(block_number) from parquet row-group statistics (no data scan)."""
+    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
     md = pq.ParquetFile(path).metadata
     names = [md.schema.column(i).name for i in range(md.num_columns)]
     idx = names.index("block_number")
-    head = None
-    for rg in range(md.num_row_groups):
-        stats = md.row_group(rg).column(idx).statistics
-        if stats is not None and stats.has_min_max:
-            mx = stats.max
-            head = mx if head is None else max(head, mx)
-    if head is None:  # stats missing: fall back to a scan of the one column
-        import pyarrow.parquet as pq2
-
-        tbl = pq2.read_table(path, columns=["block_number"])
-        head = max(tbl.column(0).to_pylist())
-    return int(head)
+    stats = [md.row_group(rg).column(idx).statistics for rg in range(md.num_row_groups)]
+    maxima = [s.max for s in stats if s is not None and s.has_min_max]
+    if not maxima:  # stats missing: fall back to a scan of the one column
+        return int(pc.max(pq.read_table(path, columns=["block_number"])[0]).as_py())
+    return int(max(maxima))
 
 
-def _fetch_table(path: str, flt: list):
-    """The one I/O call of a range fetch — the retry unit (and the seam
-    tests use to inject transient failures)."""
+def _head_of(o: _Options) -> int:
+    """Chain head from whichever backend is configured: parquet footer
+    stats (the test stand-in) or a live eth_blockNumber call (S5)."""
+    if o.rpc_url is not None:
+        return JsonRpcLogFetcher(o.rpc_url).block_number()
+    return _chain_head(o.path)
+
+
+def _fetch_table(path: str, flt: list) -> pa.Table:
+    """The one I/O call of a parquet range fetch — the retry unit (and the
+    seam tests use to inject transient failures)."""
     import pyarrow.parquet as pq
 
     return pq.read_table(path, filters=flt)
 
 
-def _fetch_with_retry(path: str, flt: list, attempts: int, base_s: float):
-    """Exponential-backoff retry around the fetch — the reference's S6
-    policy (stream.rs:148-155, data_feed/block.rs:25-26: 10 ms base,
-    doubling). ``attempts`` counts TOTAL calls (4 by default); the
-    reference's ``Retry::spawn`` with ``.take(4)`` performs an initial call
-    plus 4 retries = 5 total — an intentional off-by-one difference kept
-    because "4 attempts" reads as 4 calls in options. Re-raises the last
-    error once attempts are exhausted; a real RPC gateway source drops in
-    here unchanged.
+def _with_retry(call, transient: type[Exception], attempts: int, base_s: float):
+    """Exponential-backoff retry around one transport call — the
+    reference's S6 policy (stream.rs:148-155, data_feed/block.rs:25-26:
+    10 ms base, doubling). ``attempts`` counts TOTAL calls (4 by default);
+    the reference's ``Retry::spawn`` with ``.take(4)`` performs an initial
+    call plus 4 retries = 5 total — an intentional off-by-one difference
+    kept because "4 attempts" reads as 4 calls in options. Re-raises the
+    last error once attempts are exhausted.
 
-    Only transient I/O errors are retried (OSError covers
-    pyarrow.lib.ArrowIOError). Deterministic failures surface immediately
-    without backoff: non-OSError (bad filter, schema mismatch, programming
-    errors) and FileNotFoundError — an OSError subclass, but a missing path
-    never heals, so burning the backoff budget on it only delays the
-    report."""
-    import time
-
+    Only ``transient`` errors are retried: ``OSError`` for parquet (covers
+    pyarrow.lib.ArrowIOError), ``TransientRpcError`` for JSON-RPC.
+    Deterministic failures surface immediately without backoff: anything
+    else (bad filter, schema mismatch, node protocol errors) and
+    FileNotFoundError — an OSError subclass, but a missing path never
+    heals, so burning the backoff budget on it only delays the report."""
     attempt = 0
     while True:
         try:
-            return _fetch_table(path, flt)
+            return call()
         except FileNotFoundError:
-            raise  # deterministic: a bad path never becomes readable
-        except OSError:
+            raise
+        except transient:
             attempt += 1
             if attempt >= attempts:
                 raise
             time.sleep(base_s * (2 ** (attempt - 1)))
 
 
+def _fetch_chunk(o: _Options, lo: int, hi: int, address: str | None) -> pa.Table:
+    """Logs in [lo, hi) from the configured transport, with source-side
+    filtering: a parquet scan pushes the block range and ``address`` to
+    row groups; ``eth_getLogs`` (one call per chunk, the reference's S1
+    call, stream.rs:159-183) sends address and topic0 to the node, which
+    evaluates them server-side (stream.rs:94-102). Columns come back in
+    whatever physical types the store holds."""
+    import pyarrow as pa
+
+    if o.rpc_url is not None:
+        fetcher = JsonRpcLogFetcher(o.rpc_url)
+        rows = _with_retry(
+            lambda: fetcher.get_logs(lo, hi - 1, address=address, topic0=o.topic0),
+            TransientRpcError,
+            o.retry_attempts,
+            o.retry_base_s,
+        )
+        cols = list(zip(*rows)) or [()] * len(_COLS)
+        schema = _arrow_schema()
+        return pa.Table.from_arrays(
+            [pa.array(c, f.type) for c, f in zip(cols, schema)], schema=schema
+        )
+    flt = [("block_number", ">=", lo), ("block_number", "<", hi)]
+    if address is not None:
+        flt.append(("address", "=", address))
+    return _with_retry(
+        lambda: _fetch_table(o.path, flt), OSError, o.retry_attempts, o.retry_base_s
+    )
+
+
 def _post_filter(
-    rows: Iterator[tuple],
+    tbl: pa.Table,
     topic0: str | None,
     fail_on_removed: bool,
     address: str | None = None,
     address_exact: bool = False,
-) -> Iterator[tuple]:
-    """Client-side re-check shared by both transports: topic0 match
-    (case-insensitive hex), the S7 reorg policy on ``removed``, and —
-    when the transport could not enforce it exactly — the address contract
-    (verbatim for pushdown-sourced, lowercased for option-sourced)."""
-    want = None if address is None else (address if address_exact else address.lower())
-    for row in rows:
-        if want is not None:
-            # option-sourced contract is caseless (like the chain's 20-byte
-            # compare): lowercase BOTH sides, so a node returning EIP-55
-            # checksummed addresses still matches — mirroring the topic0
-            # comparison below. Pushdown-sourced stays verbatim (Spark
-            # re-evaluates the exact predicate post-scan anyway).
-            got = row[0] if address_exact else row[0].lower()
-            if got != want:
-                continue
-        if topic0 is not None:
-            topics = row[1]
-            if not topics or topics[0].lower() != topic0.lower():
-                continue
-        if row[6]:  # removed
-            if fail_on_removed:
-                raise ReorgError(
-                    f"removed log at block {row[3]} — increase confirmation_blocks"
-                )
-            continue
-        yield row
+) -> pa.Table:
+    """Client-side re-check shared by both transports, vectorised: the
+    address contract (verbatim for pushdown-sourced; caseless on BOTH sides
+    for option-sourced, like the chain's 20-byte compare, so a node
+    returning EIP-55 checksummed addresses still matches), the caseless
+    topic0 match (rows with null or empty ``topics`` cannot match), and the
+    S7 reorg policy on ``removed`` (null counts as not removed)."""
+    import pyarrow.compute as pc
+
+    if address is not None:
+        if address_exact:
+            tbl = tbl.filter(pc.equal(tbl["address"], address))
+        else:
+            tbl = tbl.filter(pc.equal(pc.utf8_lower(tbl["address"]), address.lower()))
+    if topic0 is not None:
+        tbl = tbl.filter(pc.greater(pc.list_value_length(tbl["topics"]), 0))
+        first = pc.list_element(tbl["topics"], 0)
+        tbl = tbl.filter(pc.equal(pc.utf8_lower(first), topic0.lower()))
+    removed = pc.fill_null(tbl["removed"], False)
+    if fail_on_removed and pc.any(removed).as_py():
+        block = tbl["block_number"].filter(removed)[0].as_py()
+        raise ReorgError(f"removed log at block {block} — increase confirmation_blocks")
+    return tbl.filter(pc.invert(removed))
 
 
 def _read_range(
-    path: str,
-    lo: int,
-    hi: int,
-    address: str | None,
-    topic0: str | None,
-    fail_on_removed: bool,
-    address_exact: bool = False,
-    retry_attempts: int = 4,
-    retry_base_s: float = 0.01,
-) -> Iterator[tuple]:
-    """Fetch logs in [lo, hi) with source-side predicate pushdown.
-
-    The address/topic0 filters reach the parquet scan (pyarrow pushes them to
-    row groups), mirroring the server-side Filter of stream.rs:94-102.
-    An option-sourced address is lowercased (source contract); a
-    pushdown-sourced one (``address_exact``) is matched verbatim so the
-    pushed predicate is semantically identical to the declined one.
-    """
-    flt = [("block_number", ">=", lo), ("block_number", "<", hi)]
-    if address is not None:
-        flt.append(("address", "=", address if address_exact else address.lower()))
-    tbl = _fetch_with_retry(path, flt, retry_attempts, retry_base_s)
-    cols = {name: tbl.column(name).to_pylist() for name in _COLS}
-    rows = (
-        tuple(cols[name][i] for name in _COLS)
-        for i in range(len(cols["block_number"]))
-    )
-    # address already enforced exactly by the scan filter; only topic0 and
-    # the reorg policy remain client-side
-    return _post_filter(rows, topic0, fail_on_removed)
+    o: _Options, lo: int, hi: int, address: str | None = None, address_exact: bool = False
+) -> pa.Table:
+    """One chunk, fetched, cast to ``ETH_LOG_SCHEMA`` and post-filtered.
+    An option-sourced address is lowercased for the transport (source
+    contract); a pushdown-sourced one (``address_exact``) is sent verbatim
+    so the pushed predicate is semantically identical to the declined one."""
+    send = None if address is None else (address if address_exact else address.lower())
+    tbl = _fetch_chunk(o, lo, hi, send).select(_COLS).cast(_arrow_schema())
+    return _post_filter(tbl, o.topic0, o.fail_on_removed, address, address_exact)
 
 
-def _read_range_rpc(
-    rpc_url: str,
-    lo: int,
-    hi: int,
-    address: str | None,
-    topic0: str | None,
-    fail_on_removed: bool,
-    address_exact: bool = False,
-    retry_attempts: int = 4,
-    retry_base_s: float = 0.01,
-) -> Iterator[tuple]:
-    """Fetch logs in [lo, hi) over live JSON-RPC — one ``eth_getLogs`` per
-    chunk, exactly the reference's S1 call (stream.rs:159-183), with the S6
-    transient-only retry policy around it. The node evaluates the
-    address/topic0 filter server-side; ``_post_filter`` re-checks both so
-    the source's exact/lowercase address contract holds regardless of node
-    case behavior (real nodes compare 20-byte binary, i.e. caseless)."""
-    import time
+class _EthLogReader:
+    """What the batch and stream readers share: the parsed options and the
+    chunk read."""
 
-    fetcher = JsonRpcLogFetcher(rpc_url)
-    send_addr = None if address is None else (address if address_exact else address.lower())
-    attempt = 0
-    while True:
-        try:
-            rows = fetcher.get_logs(lo, hi - 1, address=send_addr, topic0=topic0)
-            break
-        except TransientRpcError:
-            attempt += 1
-            if attempt >= retry_attempts:
-                raise
-            time.sleep(retry_base_s * (2 ** (attempt - 1)))
-    return _post_filter(
-        rows, topic0, fail_on_removed, address=address, address_exact=address_exact
-    )
-
-
-def _head_of(path: str | None, rpc_url: str | None) -> int:
-    """Chain head from whichever backend is configured: parquet footer
-    stats (the test stand-in) or a live eth_blockNumber call (S5)."""
-    if rpc_url is not None:
-        return JsonRpcLogFetcher(rpc_url).block_number()
-    return _chain_head(path)
-
-
-class EthLogStreamReader(DataSourceStreamReader):
     def __init__(self, options: dict):
-        self.rpc_url = options.get("rpc_url")
-        self.path = options.get("path")
-        if self.path is None and self.rpc_url is None:
-            raise ValueError("eth_logs source needs a 'path' or 'rpc_url' option")
-        self.from_block = int(options.get("from_block", 0))
-        self.to_block = int(options["to_block"]) if "to_block" in options else None
-        self.confirmations = int(options.get("confirmation_blocks", 2))
-        self.block_step = int(options.get("block_step", 1000))
-        self.address = options.get("address")
-        self.topic0 = options.get("topic0")
-        self.fail_on_removed = str(options.get("fail_on_removed", "true")).lower() == "true"
-        self.retry_attempts = int(options.get("retry_attempts", 4))
-        self.retry_base_s = float(options.get("retry_base_ms", 10)) / 1000.0
-        self._current = self.from_block
+        self.opts = _Options.parse(options)
+
+    def read(self, partition: BlockRangePartition) -> Iterator[pa.RecordBatch]:
+        # the empty-range sentinel yields nothing (and so does a None
+        # partition, should a PySpark version hand one through anyway)
+        if partition is None or partition.hi <= partition.lo:
+            return
+        yield from _read_range(
+            self.opts, partition.lo, partition.hi, partition.address, partition.address_exact
+        ).to_batches()
+
+
+class EthLogStreamReader(_EthLogReader, DataSourceStreamReader):
+    def __init__(self, options: dict):
+        super().__init__(options)
+        self._current = self.opts.from_block
 
     # offsets are dicts {"block": next_unread_block}
     def initialOffset(self) -> dict:
-        return {"block": self.from_block}
+        return {"block": self.opts.from_block}
 
     def latestOffset(self) -> dict:
-        head = _head_of(self.path, self.rpc_url)
-        safe = head - self.confirmations  # S3 confirmation lag
-        if self.to_block is not None:
-            safe = min(safe, self.to_block)
-        # per-trigger cap (S2), ALIGNED to absolute block_step multiples: the
-        # first chunk may be short, every later chunk ends on a multiple.
-        # Alignment makes micro-batch replay map exactly onto block-bucket
-        # partition overwrite downstream (sinks.write_block_partitioned with
-        # bucket_blocks == block_step) — idempotent file output for free.
-        aligned_next = (self._current // self.block_step + 1) * self.block_step
-        nxt = min(safe + 1, aligned_next)
-        nxt = max(nxt, self._current)  # never regress
-        self._current = nxt
-        return {"block": nxt}
+        o = self.opts
+        safe = _head_of(o) - o.confirmations  # S3 confirmation lag
+        if o.to_block is not None:
+            safe = min(safe, o.to_block)
+        # per-trigger cap (S2), aligned like _chunks: a micro-batch never
+        # crosses an absolute block_step multiple
+        nxt = min(safe + 1, _next_boundary(self._current, o.block_step))
+        self._current = max(nxt, self._current)  # never regress
+        return {"block": self._current}
 
     def partitions(self, start: dict, end: dict):
         lo, hi = start["block"], end["block"]
@@ -313,68 +360,15 @@ class EthLogStreamReader(DataSourceStreamReader):
         # never let the in-memory frontier lag behind it (otherwise a restart
         # pays one empty catch-up batch per block_step chunk)
         self._current = max(self._current, lo, hi)
-        if hi <= lo:
-            return [BlockRangePartition(lo, lo)]
-        step = self.block_step
-        # chunk on absolute step boundaries (same alignment as latestOffset)
-        bounds = [lo]
-        b = (lo // step + 1) * step
-        while b < hi:
-            bounds.append(b)
-            b += step
-        bounds.append(hi)
-        return [
-            BlockRangePartition(bounds[i], bounds[i + 1])
-            for i in range(len(bounds) - 1)
-        ]
-
-    def read(self, partition: BlockRangePartition) -> Iterator[tuple]:
-        if partition is None or partition.hi <= partition.lo:
-            return iter(())
-        if self.rpc_url is not None:
-            return _read_range_rpc(
-                self.rpc_url,
-                partition.lo,
-                partition.hi,
-                self.address,
-                self.topic0,
-                self.fail_on_removed,
-                retry_attempts=self.retry_attempts,
-                retry_base_s=self.retry_base_s,
-            )
-        return _read_range(
-            self.path,
-            partition.lo,
-            partition.hi,
-            self.address,
-            self.topic0,
-            self.fail_on_removed,
-            retry_attempts=self.retry_attempts,
-            retry_base_s=self.retry_base_s,
-        )
+        return _chunks(lo, hi, self.opts.block_step, self.opts.address)
 
     def commit(self, end: dict) -> None:
         pass  # offset log persistence is Spark's checkpoint
 
 
-class EthLogBatchReader(DataSourceReader):
+class EthLogBatchReader(_EthLogReader, DataSourceReader):
     """Bounded historical read (the stream_historical_logs drain) as a batch
     scan: one task per block_step chunk, same pushdown."""
-
-    def __init__(self, options: dict):
-        self.rpc_url = options.get("rpc_url")
-        self.path = options.get("path")
-        if self.path is None and self.rpc_url is None:
-            raise ValueError("eth_logs source needs a 'path' or 'rpc_url' option")
-        self.from_block = int(options.get("from_block", 0))
-        self.to_block = int(options["to_block"]) if "to_block" in options else None
-        self.block_step = int(options.get("block_step", 1000))
-        self.address = options.get("address")
-        self.topic0 = options.get("topic0")
-        self.fail_on_removed = str(options.get("fail_on_removed", "true")).lower() == "true"
-        self.pushdown_enabled = str(options.get("pushdown", "false")).lower() == "true"
-        self.retry_attempts = int(options.get("retry_attempts", 4))
-        self.retry_base_s = float(options.get("retry_base_ms", 10)) / 1000.0
 
     # per-query pushdown: (lo, hi, addr, addr_is_pushed)
     _pending: tuple[int, int | None, str | None, bool] | None = None
@@ -393,9 +387,9 @@ class EthLogBatchReader(DataSourceReader):
         unfiltered sibling returned the filtered row set; a fresh load() is
         always clean — each planning worker builds a fresh reader, the
         caching is JVM-side). Default off = always safe."""
-        if not self.pushdown_enabled:
+        if not self.opts.pushdown:
             return filters  # decline everything; Spark evaluates post-scan
-        lo, hi, addr = self.from_block, self.to_block, self.address
+        lo, hi, addr = self.opts.from_block, self.opts.to_block, self.opts.address
         addr_pushed = False
         remaining: list[Filter] = []
         for f in filters:
@@ -430,47 +424,16 @@ class EthLogBatchReader(DataSourceReader):
         return remaining
 
     def partitions(self):
+        o = self.opts
         if self._pending is not None:
             lo, to_b, addr, addr_exact = self._pending
             self._pending = None  # consumed: next (filterless) query is clean
         else:
-            lo, to_b, addr, addr_exact = (
-                self.from_block,
-                self.to_block,
-                self.address,
-                False,
-            )
-        hi = (to_b if to_b is not None else _head_of(self.path, self.rpc_url)) + 1
-        step = self.block_step
-        if hi <= lo:
-            # pushed predicates can narrow the range to empty (e.g.
-            # block_number = 5 with from_block = 10). An empty partition
-            # list is NOT safe: PySpark substitutes [None] and calls
-            # read(None). Return one empty sentinel chunk instead — the
-            # same hi<=lo convention the stream reader uses.
-            return [BlockRangePartition(lo, lo, addr, addr_exact)]
-        return [
-            BlockRangePartition(b, min(b + step, hi), addr, addr_exact)
-            for b in range(lo, hi, step)
-        ]
-
-    def read(self, partition: BlockRangePartition) -> Iterator[tuple]:
-        # belt-and-braces for the empty-range sentinel (and for a None
-        # partition should a PySpark version hand one through anyway)
-        if partition is None or partition.hi <= partition.lo:
-            return iter(())
-        read_fn = _read_range_rpc if self.rpc_url is not None else _read_range
-        return read_fn(
-            self.rpc_url if self.rpc_url is not None else self.path,
-            partition.lo,
-            partition.hi,
-            partition.address,
-            self.topic0,
-            self.fail_on_removed,
-            address_exact=partition.address_exact,
-            retry_attempts=self.retry_attempts,
-            retry_base_s=self.retry_base_s,
-        )
+            lo, to_b, addr, addr_exact = o.from_block, o.to_block, o.address, False
+        # pushed predicates can narrow the range to empty (e.g.
+        # block_number = 5 with from_block = 10): _chunks returns the sentinel
+        hi = (to_b if to_b is not None else _head_of(o)) + 1
+        return _chunks(lo, hi, o.block_step, addr, addr_exact)
 
 
 class EthLogDataSource(DataSource):
@@ -479,7 +442,8 @@ class EthLogDataSource(DataSource):
     Options: path OR rpc_url (parquet stand-in vs live JSON-RPC node —
     identical chunking/pushdown/retry/reorg semantics on both transports),
     from_block, to_block, confirmation_blocks=2, block_step=1000, address,
-    topic0, fail_on_removed=true, retry_attempts=4, retry_base_ms=10.
+    topic0, fail_on_removed=true, pushdown=false, retry_attempts=4,
+    retry_base_ms=10.
     """
 
     @classmethod

@@ -379,60 +379,6 @@ def with_block_watermark(df: DataFrame, delay_blocks: int = 0) -> DataFrame:
     return wdf.withWatermark("block_ts", f"{delay_blocks * 12} seconds")
 
 
-def reduce_events_tws(
-    df: DataFrame, reducer: EventReducer, key_cols: list[str]
-) -> DataFrame:
-    """Streaming fold on the transformWithStateInPandas API (Spark 4's
-    successor to applyInPandasWithState: typed state variables, RocksDB-
-    backed). Same EventReducer contract; requires the RocksDB state store
-    provider (set by callers/tests via
-    spark.sql.streaming.stateStore.providerClass) AND the google.protobuf
-    package (the TWS state protocol is protobuf-based; absent in some
-    environments — ``reduce_events_stream`` is the dependency-free path)."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    from ..shipping import ship_package
-
-    ship_package(df.sparkSession)
-
-    state_schema = reducer.state_schema()
-    out_schema = reducer.output_schema()
-    red = reducer
-
-    class ReducerProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("reducer_state", state_schema)
-
-        def handleInputRows(self, key, rows, timerValues):
-            if self._state.exists():
-                st = red.rows_to_state([tuple(self._state.get())])
-            else:
-                st = red.init_state()
-            # same cross-chunk ordering contract as reduce_events_stream:
-            # concatenate the trigger's chunks and sort once
-            pdfs = list(rows)
-            if pdfs:
-                whole = (
-                    pdfs[0] if len(pdfs) == 1 else pd.concat(pdfs, ignore_index=True)
-                )
-                st = red.reduce(st, _sort_batch(whole))
-            self._state.update(red.state_to_rows(st)[0])
-            yield red.emit(key, st)
-
-        def close(self) -> None:
-            pass
-
-    return df.groupBy(*key_cols).transformWithStateInPandas(
-        ReducerProcessor(),
-        outputStructType=out_schema,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 class SequenceCountReducer(EventReducer):
     """Suffix-anchored pattern matching — the reference's EventReducer use
     case beyond folds (sink.rs:139-148 hands every suffix of the sorted

@@ -768,7 +768,7 @@ def test_half_up_micro_matches_spark_round(spark):
     itself, on exact halves (where rint's half-to-even diverges from
     Java's HALF_UP), one-ulp neighbors of halves (inside the suspect
     window, must follow the actual value), negatives (HALF_UP rounds
-    away from zero), and plain values."""
+    away from zero), and plain values; NaN/±Inf inputs raise."""
     import math
 
     import numpy as np
@@ -791,3 +791,8 @@ def test_half_up_micro_matches_spark_round(spark):
     assert got_kernel == got_spark, list(
         (v, s, k) for v, s, k in zip(vals, got_spark, got_kernel) if s != k
     )
+    # NaN/±Inf have no int64 micro-unit: a named error, never INT64_MIN
+    # (which would win every argmin it reached)
+    for bad in (math.nan, math.inf, -math.inf):
+        with pytest.raises(ValueError, match="NaN or infinite"):
+            _half_up_micro(np.array([1.5, bad, -2.5], dtype=np.float64))

@@ -10,6 +10,7 @@ import json
 import threading
 from http.server import BaseHTTPRequestHandler, HTTPServer
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -109,6 +110,11 @@ class _FakeNode:
         self.server.server_close()
 
 
+def _rpc_opts(url: str, **options):
+    """Parsed eth_logs options over ``url`` with a 1 ms retry base."""
+    return bs._Options.parse({"rpc_url": url, "retry_base_ms": "1", **options})
+
+
 @pytest.fixture(scope="module")
 def node():
     fx = generate_eth_logs()
@@ -133,14 +139,13 @@ def test_rpc_read_range_retries_transient_then_succeeds(node):
     fx, n = node
     n.fail_next = 2
     before = len(n.calls)
-    rows = list(
-        bs._read_range_rpc(
-            n.url, fx.from_block, fx.from_block + 10, ADDR_A, TRANSFER_TOPIC0,
-            fail_on_removed=False, retry_attempts=4, retry_base_s=0.001,
-        )
+    tbl = bs._read_range(
+        _rpc_opts(n.url, topic0=TRANSFER_TOPIC0, fail_on_removed="false", retry_attempts="4"),
+        fx.from_block, fx.from_block + 10, ADDR_A,
     )
     assert len(n.calls) - before == 3  # 2 transient failures + 1 success
-    assert all(not r[6] for r in rows)
+    assert tbl.num_rows > 0
+    assert not any(tbl["removed"].to_pylist())
 
 
 def test_rpc_fails_fast_on_node_error(node):
@@ -158,11 +163,9 @@ def test_rpc_exhaustion_reraises_transient(node):
     n.fail_next = 99
     before = len(n.calls)
     with pytest.raises(TransientRpcError):
-        list(
-            bs._read_range_rpc(
-                n.url, fx.from_block, fx.from_block + 1, None, None,
-                fail_on_removed=False, retry_attempts=3, retry_base_s=0.001,
-            )
+        bs._read_range(
+            _rpc_opts(n.url, fail_on_removed="false", retry_attempts="3"),
+            fx.from_block, fx.from_block + 1,
         )
     assert len(n.calls) - before == 3
     n.fail_next = 0
@@ -175,21 +178,18 @@ def test_post_filter_accepts_checksummed_node_addresses():
     the chain's 20-byte address compare)."""
     checksummed = "0xA0b86991c6218b36c1d19D4a2e9Eb0cE3606eB48"
     row = (checksummed, [TRANSFER_TOPIC0], b"\x00" * 32, 5, 0, "0xabc", False)
-    out = list(
-        bs._post_filter(
-            iter([row]), TRANSFER_TOPIC0, fail_on_removed=True,
-            address=checksummed.lower(), address_exact=False,
-        )
+    tbl = pa.Table.from_pylist([dict(zip(bs._COLS, row))], schema=bs._arrow_schema())
+    out = bs._post_filter(
+        tbl, TRANSFER_TOPIC0, fail_on_removed=True,
+        address=checksummed.lower(), address_exact=False,
     )
-    assert out == [row]
+    assert [tuple(r.values()) for r in out.to_pylist()] == [row]
     # pushdown-sourced stays verbatim: a case mismatch is NOT matched
-    out_exact = list(
-        bs._post_filter(
-            iter([row]), TRANSFER_TOPIC0, fail_on_removed=True,
-            address=checksummed.lower(), address_exact=True,
-        )
+    out_exact = bs._post_filter(
+        tbl, TRANSFER_TOPIC0, fail_on_removed=True,
+        address=checksummed.lower(), address_exact=True,
     )
-    assert out_exact == []
+    assert out_exact.num_rows == 0
 
 
 def test_block_number_null_result_is_rpc_error(monkeypatch):

@@ -45,6 +45,54 @@ def test_batch_read_golden_count(source_registered, eth_logs_fixture):
     assert n == fx.golden_count_a
 
 
+def test_batch_read_noncanonical_parquet_types(
+    source_registered, eth_logs_fixture, tmp_path
+):
+    """A store whose physical types differ from ETH_LOG_SCHEMA (int32
+    block_number/log_index, large_string address) reads back as the same
+    rows, typed as ETH_LOG_SCHEMA: every chunk is cast before it reaches
+    Spark, which checks only the column names of a returned RecordBatch."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from eth_event_stream_spark.sources.block_source import ETH_LOG_SCHEMA
+
+    spark = source_registered
+    fx, path = eth_logs_fixture
+    canonical = fx.to_arrow()
+    narrow = canonical.cast(
+        pa.schema(
+            [
+                f.with_type(
+                    {"block_number": pa.int32(), "log_index": pa.int32(),
+                     "address": pa.large_string()}.get(f.name, f.type)
+                )
+                for f in canonical.schema
+            ]
+        )
+    )
+    narrow_path = str(tmp_path / "narrow.parquet")
+    pq.write_table(narrow, narrow_path)
+    assert pq.read_schema(narrow_path).field("block_number").type == pa.int32()
+
+    def read(p):
+        df = (
+            spark.read.format("eth_logs")
+            .option("path", p)
+            .option("from_block", fx.from_block)
+            .option("to_block", fx.to_block)
+            .option("block_step", 20)
+            .option("fail_on_removed", "false")
+            .load()
+        )
+        return df.schema, sorted(tuple(r) for r in df.collect())
+
+    schema_n, rows_n = read(narrow_path)
+    schema_c, rows_c = read(path)
+    assert schema_n == schema_c == ETH_LOG_SCHEMA
+    assert rows_n == rows_c and len(rows_c) > 0
+
+
 def test_batch_read_reorg_fails(source_registered, eth_logs_fixture):
     """S7: removed logs fail the read under the default policy."""
     spark = source_registered
@@ -220,90 +268,6 @@ def test_reducer_stream_matches_batch(source_registered, eth_logs_fixture, tmp_p
         SELECT key, net_cents, n_events FROM (
           SELECT *, ROW_NUMBER() OVER (PARTITION BY key ORDER BY mono DESC) rn
           FROM (SELECT *, monotonically_increasing_id() AS mono FROM reducer_sink)
-        ) WHERE rn = 1
-        """
-    ).collect()
-    got = {r["key"]: (r["net_cents"], r["n_events"]) for r in rows}
-    assert got == expected
-
-
-def _protobuf_available() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _protobuf_available(),
-    reason="transformWithStateInPandas needs google.protobuf — verified absent "
-    "again this round (`import google.protobuf` -> ModuleNotFoundError) and the "
-    "environment forbids pip/apt installs, so the dependency cannot be added or "
-    "vendored; applyInPandasWithState covers the stateful contract here (its "
-    "stream==batch parity tests exercise the same reducer semantics)",
-)
-def test_reducer_tws_matches_batch(source_registered, eth_logs_fixture, tmp_path):
-    """B10 on transformWithStateInPandas (RocksDB state store): same state
-    as the batch fold."""
-    spark = source_registered
-    fx, path = eth_logs_fixture
-    from eth_event_stream_spark.streaming.reducer import reduce_events_tws
-
-    prepared = _prep_cents
-
-    batch = (
-        spark.read.format("eth_logs")
-        .option("path", path)
-        .option("from_block", fx.from_block)
-        .option("to_block", fx.to_block)
-        .option("fail_on_removed", "false")
-        .load()
-    )
-    expected = {
-        r["key"]: (r["net_cents"], r["n_events"])
-        for r in reduce_events_batch(prepared(batch), CentsNetflowReducer(), ["key"]).collect()
-    }
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", "")
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = (
-            spark.readStream.format("eth_logs")
-            .option("path", path)
-            .option("from_block", fx.from_block)
-            .option("to_block", fx.to_block)
-            .option("block_step", 30)
-            .option("confirmation_blocks", 0)
-            .option("fail_on_removed", "false")
-            .load()
-        )
-        sdf = reduce_events_tws(prepared(stream), CentsNetflowReducer(), ["key"])
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName("tws_sink")
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "ck_tws"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        if prev:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    rows = spark.sql(
-        """
-        SELECT key, net_cents, n_events FROM (
-          SELECT *, ROW_NUMBER() OVER (PARTITION BY key ORDER BY mono DESC) rn
-          FROM (SELECT *, monotonically_increasing_id() AS mono FROM tws_sink)
         ) WHERE rn = 1
         """
     ).collect()
@@ -952,7 +916,9 @@ def test_stream_exact_dedup_content_hash_parity(spark, sf_dir, tmp_path):
 # --- S6 retry policy + pushdown address semantics (unit level, no session) ---
 
 
-def _write_logs_parquet(path: str, addresses: list[str]) -> None:
+def _write_logs_parquet(
+    path: str, addresses: list[str], topics=None, removed=None
+) -> None:
     """Tiny eth_logs-shaped parquet: one log per address, block i."""
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -961,15 +927,22 @@ def _write_logs_parquet(path: str, addresses: list[str]) -> None:
     tbl = pa.table(
         {
             "address": pa.array(addresses, pa.string()),
-            "topics": pa.array([["0xt0"]] * n, pa.list_(pa.string())),
+            "topics": pa.array(topics or [["0xt0"]] * n, pa.list_(pa.string())),
             "data": pa.array([b""] * n, pa.binary()),
             "block_number": pa.array(list(range(n)), pa.int64()),
             "log_index": pa.array([0] * n, pa.int64()),
             "transaction_hash": pa.array(["0xh"] * n, pa.string()),
-            "removed": pa.array([False] * n, pa.bool_()),
+            "removed": pa.array(removed or [False] * n, pa.bool_()),
         }
     )
     pq.write_table(tbl, path)
+
+
+def _opts(path: str, **options):
+    """Parsed eth_logs options over ``path`` with a 1 ms retry base."""
+    from eth_event_stream_spark.sources import block_source as bs
+
+    return bs._Options.parse({"path": path, "retry_base_ms": "1", **options})
 
 
 def test_retry_transient_then_success(tmp_path, monkeypatch):
@@ -989,9 +962,9 @@ def test_retry_transient_then_success(tmp_path, monkeypatch):
         return real(p, flt)
 
     monkeypatch.setattr(bs, "_fetch_table", flaky)
-    rows = list(bs._read_range(path, 0, 10, None, None, True, retry_base_s=0.001))
+    tbl = bs._read_range(_opts(path), 0, 10)
     assert calls["n"] == 3
-    assert len(rows) == 2
+    assert tbl.num_rows == 2
 
 
 def test_retry_exhaustion_reraises(tmp_path, monkeypatch):
@@ -1008,8 +981,7 @@ def test_retry_exhaustion_reraises(tmp_path, monkeypatch):
 
     monkeypatch.setattr(bs, "_fetch_table", always_down)
     with pytest.raises(OSError):
-        list(bs._read_range(path, 0, 10, None, None, True,
-                            retry_attempts=4, retry_base_s=0.001))
+        bs._read_range(_opts(path, retry_attempts="4"), 0, 10)
     assert calls["n"] == 4
 
 
@@ -1028,7 +1000,7 @@ def test_retry_fails_fast_on_deterministic_error(tmp_path, monkeypatch):
 
     monkeypatch.setattr(bs, "_fetch_table", bad_query)
     with pytest.raises(ValueError):
-        list(bs._read_range(path, 0, 10, None, None, True, retry_base_s=0.001))
+        bs._read_range(_opts(path), 0, 10)
     assert calls["n"] == 1
 
 
@@ -1071,7 +1043,7 @@ def test_retry_fails_fast_on_missing_file(tmp_path, monkeypatch):
 
     monkeypatch.setattr(bs, "_fetch_table", missing)
     with pytest.raises(FileNotFoundError):
-        list(bs._read_range(path, 0, 10, None, None, True, retry_base_s=0.001))
+        bs._read_range(_opts(path), 0, 10)
     assert calls["n"] == 1
 
 
@@ -1102,6 +1074,52 @@ def test_batch_partitions_never_empty_on_empty_range(tmp_path):
     assert list(reader2.read(parts2[0])) == []
 
 
+def test_post_filter_drops_null_and_empty_topics(tmp_path):
+    """Under a topic0 filter, rows with null or empty ``topics`` cannot
+    match and are dropped (the match itself is caseless); a null
+    ``removed`` counts as not removed, so it neither fails the read (the
+    default fail_on_removed policy is on here) nor is dropped, and it
+    passes through as null. Without topic0, rows with empty topics (LOG0)
+    pass."""
+    from eth_event_stream_spark.sources import block_source as bs
+
+    path = str(tmp_path / "logs.parquet")
+    _write_logs_parquet(
+        path,
+        ["0xaa"] * 5,
+        topics=[["0xT0"], [], None, ["0xt1"], ["0xt0", "0xt9"]],
+        removed=[None, False, None, False, False],
+    )
+    tbl = bs._read_range(_opts(path, topic0="0xt0"), 0, 10)
+    assert tbl["block_number"].to_pylist() == [0, 4]
+    assert tbl["removed"].to_pylist() == [None, False]
+    assert tbl.schema == bs._arrow_schema()
+    everything = bs._read_range(_opts(path), 0, 10)
+    assert everything["block_number"].to_pylist() == [0, 1, 2, 3, 4]
+
+
+def test_batch_partitions_align_to_block_step(eth_logs_fixture):
+    """S2: the batch reader cuts an unaligned range like the stream reader
+    does — the first chunk is short and every later chunk starts on an
+    absolute block_step multiple (the sink's bucket-overwrite contract)."""
+    from eth_event_stream_spark.sources import block_source as bs
+
+    fx, path = eth_logs_fixture
+    assert fx.from_block % 20 != 0
+    opts = {"path": path, "from_block": str(fx.from_block),
+            "to_block": str(fx.to_block), "block_step": "20"}
+    parts = bs.EthLogBatchReader(opts).partitions()
+    bounds = [(p.lo, p.hi) for p in parts]
+    assert bounds[0][0] == fx.from_block and bounds[-1][1] == fx.to_block + 1
+    assert all(a[1] == b[0] for a, b in zip(bounds, bounds[1:]))
+    assert all(hi % 20 == 0 for _, hi in bounds[:-1])
+    assert bounds[0] == (fx.from_block, fx.from_block // 20 * 20 + 20)
+    stream = bs.EthLogStreamReader(opts).partitions(
+        {"block": fx.from_block}, {"block": fx.to_block + 1}
+    )
+    assert [(p.lo, p.hi) for p in stream] == bounds
+
+
 def test_batch_empty_pushed_range_end_to_end(source_registered, tmp_path):
     """The ADVICE repro verbatim: WHERE block_number = N below from_block
     ran read(None) and crashed; it must now return an empty DataFrame."""
@@ -1118,6 +1136,10 @@ def test_batch_empty_pushed_range_end_to_end(source_registered, tmp_path):
         .filter("block_number = 5")
     )
     assert df.count() == 0
+
+
+def _read_addresses(reader, parts) -> list[str]:
+    return [a for p in parts for b in reader.read(p) for a in b["address"].to_pylist()]
 
 
 def test_pushdown_address_is_exact_option_address_is_lowercased(tmp_path):
@@ -1140,15 +1162,13 @@ def test_pushdown_address_is_exact_option_address_is_lowercased(tmp_path):
     assert len(remaining) == 1  # filter retained for Spark's post-scan check
     parts = reader.partitions()
     assert all(p.address == "0xAbCd" and p.address_exact for p in parts)
-    rows = [r for p in parts for r in reader.read(p)]
-    assert [r[0] for r in rows] == ["0xAbCd"]
+    assert _read_addresses(reader, parts) == ["0xAbCd"]
 
     # option path: the same string is lowercased before the scan
     reader2 = bs.EthLogBatchReader({"path": path, "address": "0xAbCd", "to_block": "9"})
     parts2 = reader2.partitions()
     assert all(p.address == "0xAbCd" and not p.address_exact for p in parts2)
-    rows2 = [r for p in parts2 for r in reader2.read(p)]
-    assert [r[0] for r in rows2] == ["0xabcd"]
+    assert _read_addresses(reader2, parts2) == ["0xabcd"]
 
 
 def _stateless_core(name):
