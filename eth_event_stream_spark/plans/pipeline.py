@@ -1407,9 +1407,7 @@ def reducer_funnel_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     return reduce_events_batch(ev, FunnelReducer(), ["user_id"])
 
 
-@register(
-    "reducer_netflow_batch",
-    oracle="""
+_SQL_REDUCER_NETFLOW = """
     SELECT user_id AS key,
            CAST(SUM(CASE WHEN event_type = 'purchase'
                          THEN -CAST(ROUND(value * 100, 0) AS BIGINT)
@@ -1417,17 +1415,23 @@ def reducer_funnel_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS net_cents,
            COUNT(*) AS n_events
     FROM events GROUP BY user_id
-    """,
+    """
+
+
+@register(
+    "reducer_netflow_arrow",
+    oracle=_SQL_REDUCER_NETFLOW,
+    doc="reducer_netflow_batch under its earlier Arrow-twin name: the one "
+    "EventReducer batch runner is applyInArrow, so both names run one body.",
 )
+@register("reducer_netflow_batch", oracle=_SQL_REDUCER_NETFLOW)
 def reducer_netflow_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The stateful EventReducer API (sink.rs:125-151) in batch form:
-    applyInPandas folds block-sorted events per key. State arithmetic is in
+    applyInArrow folds block-sorted events per key. State arithmetic is in
     integer cents — exact, so the Python fold matches the SQL oracle.
 
     Here to exercise the stateful path end-to-end; the algebraic equivalent
     (flagship_user_netflow) is the production shape for this fold."""
-    import pandas as pd
-
     from ..streaming.reducer import CentsNetflowReducer, reduce_events_batch
 
     ev = t(spark, sf_dir, "events").select(
@@ -1438,35 +1442,6 @@ def reducer_netflow_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_id").alias("log_index"),
     )
     return reduce_events_batch(ev, CentsNetflowReducer(), ["user_id"])
-
-
-@register(
-    "reducer_netflow_arrow",
-    oracle="""
-    SELECT user_id AS key,
-           CAST(SUM(CASE WHEN event_type = 'purchase'
-                         THEN -CAST(ROUND(value * 100, 0) AS BIGINT)
-                         ELSE  CAST(ROUND(value * 100, 0) AS BIGINT) END) AS BIGINT)
-             AS net_cents,
-           COUNT(*) AS n_events
-    FROM events GROUP BY user_id
-    """,
-)
-def reducer_netflow_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """reducer_netflow_batch's Arrow twin: the same keyed fold over
-    applyInArrow (ArrowEventReducer), skipping the per-group Arrow->pandas
-    materialization — the cheaper floor when the fold itself is columnar.
-    Same oracle as the pandas path: the two must agree bit-for-bit."""
-    from ..streaming.reducer import CentsNetflowArrowReducer, reduce_events_batch_arrow
-
-    ev = t(spark, sf_dir, "events").select(
-        F.col("user_id"),
-        F.col("value"),
-        F.when(F.col("event_type") == "purchase", -1).otherwise(1).alias("sign"),
-        (F.unix_timestamp("ts")).alias("block_number"),
-        F.col("event_id").alias("log_index"),
-    )
-    return reduce_events_batch_arrow(ev, CentsNetflowArrowReducer(), ["user_id"])
 
 
 @register(

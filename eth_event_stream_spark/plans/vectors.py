@@ -809,11 +809,15 @@ def _sql_pq_search(rounds: int) -> str:
 
 def _half_up_micro(V):
     """int64 of Spark's ``ROUND(x, 0)`` (Java HALF_UP on the shortest
-    decimal repr) applied to an ndarray: bulk ``np.rint`` (half-to-even),
-    then the rare exact-half suspects fixed with decimal-on-repr. The one
-    copy of this rounding: the ivf_build_centroids Lloyd kernel and the PQ
-    refine/encode kernels all call it, pinned by the near-half adversary
-    gates.
+    decimal repr) applied to an ndarray. A double's shortest repr is
+    exactly ``n.5`` only when the double equals n.5, so exact halves are
+    the only values where HALF_UP differs from ``np.rint``
+    (half-to-even): those round away from zero, everything else is
+    ``np.rint``. The half test runs on ``|V|`` — for
+    ``V = -0.49999999999999994``, ``V - floor(V)`` rounds to exactly 0.5.
+    The one copy of this rounding: the ivf_build_centroids Lloyd kernel
+    and the PQ refine/encode kernels all call it, pinned by the near-half
+    adversary gates.
 
     NaN and ±Inf have no int64 value (the cast would turn NaN into
     INT64_MIN, which then wins every argmin), so they raise ``ValueError``
@@ -824,17 +828,9 @@ def _half_up_micro(V):
         raise ValueError(
             "_half_up_micro: NaN or infinite input has no int64 micro-unit value"
         )
-    scaled = np.rint(V).astype(np.int64)
-    near_half = np.argwhere(np.abs(V - np.floor(V) - 0.5) < 1e-9)
-    if near_half.size:
-        from decimal import ROUND_HALF_UP, Decimal
-
-        for idx in near_half:
-            i = tuple(idx)
-            scaled[i] = int(
-                Decimal(repr(V[i])).quantize(Decimal(1), rounding=ROUND_HALF_UP)
-            )
-    return scaled
+    A = np.abs(V)
+    half = A - np.floor(A) == 0.5
+    return np.where(half, np.copysign(np.floor(A) + 1, V), np.rint(V)).astype(np.int64)
 
 
 def _pq_codes(
@@ -1078,27 +1074,10 @@ def pq_search_topk(
     )
     cand = approx.orderBy("adist_micro", "vec_id").limit(PQ_CAND)
     q = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qe"))
-    dot = (
-        "aggregate(zip_with(CAST(embedding AS ARRAY<DOUBLE>), CAST(qe AS ARRAY<DOUBLE>), "
-        "(x, y) -> x * y), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-    )
-    na = (
-        "aggregate(zip_with(CAST(embedding AS ARRAY<DOUBLE>), CAST(embedding AS ARRAY<DOUBLE>), "
-        "(x, y) -> x * y), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-    )
-    nb = (
-        "aggregate(zip_with(CAST(qe AS ARRAY<DOUBLE>), CAST(qe AS ARRAY<DOUBLE>), "
-        "(x, y) -> x * y), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-    )
     return (
         cand.join(e, "vec_id")
         .crossJoin(F.broadcast(q))
-        .select(
-            "vec_id",
-            "label",
-            "adist_micro",
-            F.round(F.expr(f"({dot}) / (sqrt({na}) * sqrt({nb}))"), 6).alias("cosine"),
-        )
+        .select("vec_id", "label", "adist_micro", cosine_to_qe().alias("cosine"))
         .orderBy(F.desc("cosine"), F.asc("vec_id"))
         .limit(10)
     )

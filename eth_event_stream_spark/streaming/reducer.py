@@ -1,19 +1,34 @@
 """Stateful reducer API — the reference ``EventReducer`` trait, Spark-first.
 
 The reference folds reducers over dense, block-sorted event batches
-(/root/reference/eth_event_stream/src/sink.rs:125-151: ``reduce(&mut self,
+(the reference's eth_event_stream/src/sink.rs:125-151: ``reduce(&mut self,
 block_number, ordered_events)``), with state living in the reducer struct.
 
 Spark decomposition (SURVEY §7.4.3):
 
 - **Algebraic folds** (netflow, counters) degenerate to ``groupBy().agg()`` —
   use the plans layer; never pay for ordered state you don't need.
-- **Order-dependent / general state** uses this module:
-  - streaming: ``applyInPandasWithState`` keyed by a partition key, each
-    micro-batch delivering block-sorted rows to ``EventReducer.reduce``;
-  - batch: ``applyInPandas`` over the same key with an in-group sort — the
-    identical reducer code runs in both (the reference's historical/live
-    unification).
+- **Order-dependent / general state** uses this module: ONE contract,
+  ``EventReducer``, whose ``reduce`` folds a block-sorted ``pyarrow.Table``,
+  and two runners that hand it the same Arrow types (the reference's
+  historical/live unification):
+  - batch, ``reduce_events_batch``: ``applyInArrow`` over the key, one
+    fold per key from ``init_state()``;
+  - stream, ``reduce_events_stream``: ``applyInPandasWithState`` in update
+    mode — the only stateful Python API usable here (``transformWithState*``
+    needs ``google.protobuf``). Each trigger's rows for a key are converted
+    once to Arrow, typed by the input DataFrame's schema.
+
+State is a dict keyed by the ``state_schema`` field names. The harness
+stores it as one state row in that field order and restores the dict from
+it; a stored row shorter than the schema restores its missing trailing
+fields as ``None``, so a field appended to a state schema keeps older
+checkpoints restorable.
+
+Limit (PySpark's, not this module's): ``applyInPandasWithState`` hands a
+nullable BIGINT column to Python as float64, so values above 2^53 arrive
+rounded before any user code runs; the typed Arrow conversion cannot
+restore them. The batch runner has no such limit.
 
 State is partitioned by ``key_cols`` — the scale contract: the reference's
 single ``Arc<Mutex<State>>`` becomes N independent shards; anything global
@@ -25,9 +40,13 @@ from __future__ import annotations
 from abc import ABC, abstractmethod
 from typing import Any, Iterator
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import StructType
 
@@ -41,15 +60,17 @@ class EventReducer(ABC):
     """
 
     @abstractmethod
-    def init_state(self) -> Any: ...
+    def init_state(self) -> dict[str, Any]:
+        """Fresh state, keyed by the ``state_schema`` field names."""
 
     @abstractmethod
-    def reduce(self, state: Any, events: pd.DataFrame) -> Any:
+    def reduce(self, state: dict[str, Any], events: pa.Table) -> dict[str, Any]:
         """Fold block-sorted events into state; return the new state."""
 
     @abstractmethod
-    def emit(self, key: tuple, state: Any) -> pd.DataFrame:
-        """Current aggregate rows for this key (the live-monitor read side,
+    def emit(self, key: tuple, state: dict[str, Any]) -> dict[str, Any]:
+        """This key's current aggregate as one row keyed by the
+        ``output_schema`` field names (the live-monitor read side,
         examples/stream_multi.rs:116-143)."""
 
     @abstractmethod
@@ -58,16 +79,20 @@ class EventReducer(ABC):
     @abstractmethod
     def output_schema(self) -> StructType: ...
 
-    @abstractmethod
-    def state_to_rows(self, state: Any) -> list[tuple]: ...
 
-    @abstractmethod
-    def rows_to_state(self, rows: list[tuple]) -> Any: ...
+def restore_state(names: list[str], row) -> dict[str, Any]:
+    """The state dict from a stored state row; fields past the end of a
+    shorter (older-schema) row restore as ``None``. (Spark's state-store
+    schema check must also accept the widening; where it refuses, the path
+    is a fresh checkpoint — the fold replays from the source's block
+    frontier.)"""
+    row = tuple(row)
+    return {n: row[i] if i < len(row) else None for i, n in enumerate(names)}
 
 
-def _sort_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    cols = [c for c in ("block_number", "log_index") if c in pdf.columns]
-    return pdf.sort_values(cols) if cols else pdf
+def _sort_events(events: pa.Table) -> pa.Table:
+    keys = [(c, "ascending") for c in ("block_number", "log_index") if c in events.column_names]
+    return events.sort_by(keys) if keys else events
 
 
 def reduce_events_stream(
@@ -79,18 +104,17 @@ def reduce_events_stream(
     aggregates. Exactly the consumer loop of sink.rs:134-151 with Spark's
     state store replacing the Arc<Mutex<..>>.
     """
-
     from ..shipping import ship_package
 
     ship_package(df.sparkSession)
+    in_schema = to_arrow_schema(df.schema)
+    state_schema, out = reducer.state_schema(), reducer.output_schema()
+    state_names = state_schema.names
 
     def fn(
         key: tuple, batches: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            st = reducer.rows_to_state([tuple(state.get)])
-        else:
-            st = reducer.init_state()
+        st = restore_state(state_names, state.get) if state.exists else reducer.init_state()
         # a key's micro-batch arrives as MULTIPLE Arrow chunks in
         # shuffled-partition order — sorting each chunk independently would
         # hand order-sensitive reducers (sequence matching) out-of-order
@@ -100,15 +124,15 @@ def reduce_events_stream(
         pdfs = list(batches)
         if pdfs:
             whole = pdfs[0] if len(pdfs) == 1 else pd.concat(pdfs, ignore_index=True)
-            st = reducer.reduce(st, _sort_batch(whole))
-        rows = reducer.state_to_rows(st)
-        state.update(rows[0])
-        yield reducer.emit(key, st)
+            events = pa.Table.from_pandas(whole, schema=in_schema, preserve_index=False)
+            st = reducer.reduce(st, _sort_events(events))
+        state.update(tuple(st[n] for n in state_names))
+        yield pd.DataFrame([reducer.emit(key, st)], columns=out.names)
 
     return df.groupBy(*key_cols).applyInPandasWithState(
         fn,
-        outputStructType=reducer.output_schema(),
-        stateStructType=reducer.state_schema(),
+        outputStructType=out,
+        stateStructType=state_schema,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
@@ -117,72 +141,47 @@ def reduce_events_stream(
 def reduce_events_batch(
     df: DataFrame, reducer: EventReducer, key_cols: list[str]
 ) -> DataFrame:
-    """Batch fold: the SAME reducer over applyInPandas (historical drain)."""
+    """Batch fold: the SAME reducer over applyInArrow (historical drain).
+    Each task folds its keys' sorted rows on the Arrow buffers Spark
+    transferred — no per-group pandas materialization."""
     from ..shipping import ship_package
 
     ship_package(df.sparkSession)
+    out = reducer.output_schema()
+    out_schema = to_arrow_schema(out)
 
-    def fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        st = reducer.reduce(reducer.init_state(), _sort_batch(pdf))
-        return reducer.emit(key, st)
+    def fn(key: tuple, tbl: pa.Table) -> pa.Table:
+        st = reducer.reduce(reducer.init_state(), _sort_events(tbl))
+        row = reducer.emit(tuple(k.as_py() for k in key), st)
+        return pa.Table.from_pylist([row], schema=out_schema)
 
-    return df.groupBy(*key_cols).applyInPandas(fn, schema=reducer.output_schema())
-
-
-class NetflowReducer(EventReducer):
-    """The reference's flagship reducer (examples/stream_multi.rs:33-70):
-    per-key net value flow plus the event counter, as explicit state.
-
-    Exists to exercise the stateful path; the production shape for this
-    particular (algebraic) fold is plans.eventflow.flagship_user_netflow.
-    Expects columns: value (double), sign (+1/-1), block_number, log_index.
-    """
-
-    def init_state(self):
-        return {"net": 0.0, "n": 0}
-
-    def reduce(self, state, events: pd.DataFrame):
-        state["net"] += float((events["value"] * events["sign"]).sum())
-        state["n"] += int(len(events))
-        return state
-
-    def emit(self, key, state) -> pd.DataFrame:
-        return pd.DataFrame(
-            {"key": [key[0]], "netflow": [state["net"]], "n_events": [state["n"]]}
-        )
-
-    def state_schema(self) -> StructType:
-        return StructType.fromDDL("net DOUBLE, n BIGINT")
-
-    def output_schema(self) -> StructType:
-        return StructType.fromDDL("key BIGINT, netflow DOUBLE, n_events BIGINT")
-
-    def state_to_rows(self, state) -> list[tuple]:
-        return [(state["net"], state["n"])]
-
-    def rows_to_state(self, rows) -> Any:
-        return {"net": rows[0][0], "n": rows[0][1]}
+    return df.groupBy(*key_cols).applyInArrow(fn, schema=out)
 
 
 class CentsNetflowReducer(EventReducer):
-    """NetflowReducer with exact integer-cents state — cross-engine-exact
-    (the oracle-checkable variant; SURVEY §7.4.1's "do no worse than the
-    reference's lossy i128" applied to doubles). Expects columns: value
+    """The reference's flagship reducer (examples/stream_multi.rs:33-70):
+    per-key net value flow plus the event counter, with exact integer-cents
+    state — cross-engine-exact (the oracle-checkable variant; SURVEY
+    §7.4.1's "do no worse than the reference's lossy i128" applied to
+    doubles). Cents are value*100 rounded half to even (``pc.round``'s
+    default, as numpy's), signed and summed. Expects columns: value
     (double, 2-decimal), sign (+1/-1)."""
 
     def init_state(self):
         return {"cents": 0, "n": 0}
 
-    def reduce(self, state, events: pd.DataFrame):
-        cents = (events["value"] * 100).round().astype("int64") * events["sign"]
-        state["cents"] += int(cents.sum())
-        state["n"] += int(len(events))
+    def reduce(self, state, events):
+        cents = pc.cast(
+            pc.round(pc.multiply(events.column("value"), pa.scalar(100.0))),
+            pa.int64(),
+        )
+        signed = pc.multiply(cents, pc.cast(events.column("sign"), pa.int64()))
+        state["cents"] += pc.sum(signed).as_py() or 0
+        state["n"] += events.num_rows
         return state
 
-    def emit(self, key, state) -> pd.DataFrame:
-        return pd.DataFrame(
-            {"key": [key[0]], "net_cents": [state["cents"]], "n_events": [state["n"]]}
-        )
+    def emit(self, key, state):
+        return {"key": key[0], "net_cents": state["cents"], "n_events": state["n"]}
 
     def state_schema(self) -> StructType:
         return StructType.fromDDL("cents BIGINT, n BIGINT")
@@ -190,11 +189,11 @@ class CentsNetflowReducer(EventReducer):
     def output_schema(self) -> StructType:
         return StructType.fromDDL("key BIGINT, net_cents BIGINT, n_events BIGINT")
 
-    def state_to_rows(self, state) -> list[tuple]:
-        return [(state["cents"], state["n"])]
 
-    def rows_to_state(self, rows) -> Any:
-        return {"cents": rows[0][0], "n": rows[0][1]}
+# The benchmark's drain (perfbench/drain.py) imports the names of the former
+# Arrow-only batch contract; both are the one contract now.
+CentsNetflowArrowReducer = CentsNetflowReducer
+reduce_events_batch_arrow = reduce_events_batch
 
 
 class FunnelReducer(EventReducer):
@@ -213,15 +212,19 @@ class FunnelReducer(EventReducer):
     state ENFORCES it: ``m`` tracks the max block seen per key, and a later
     trigger delivering an earlier block raises instead of silently folding
     a wrong funnel (within one trigger the harness sorts, so only genuine
-    cross-trigger regressions trip it)."""
+    cross-trigger regressions trip it). ``m`` is the 4th state field, added
+    after the first three: a 3-field checkpoint restores with ``m=None``
+    and the guard re-arms on the next folded block."""
 
     def init_state(self):
         return {"v": None, "c": None, "p": None, "m": None}
 
-    def reduce(self, state, events: pd.DataFrame):
+    def reduce(self, state, events):
         v, c, p, m = state["v"], state["c"], state["p"], state["m"]
-        for ts_us, et in zip(events["block_number"], events["event_type"]):
-            ts_us = int(ts_us)
+        for ts_us, et in zip(
+            events.column("block_number").to_pylist(),
+            events.column("event_type").to_pylist(),
+        ):
             if m is not None and ts_us < m:
                 raise ValueError(
                     f"FunnelReducer: out-of-order delivery — block {ts_us} "
@@ -242,19 +245,17 @@ class FunnelReducer(EventReducer):
         state["v"], state["c"], state["p"], state["m"] = v, c, p, m
         return state
 
-    def emit(self, key, state) -> pd.DataFrame:
+    def emit(self, key, state):
         stage = 3 if state["p"] is not None else (
             2 if state["c"] is not None else (1 if state["v"] is not None else 0)
         )
-        return pd.DataFrame(
-            {
-                "key": [key[0]],
-                "stage": [stage],
-                "t_view_us": [state["v"]],
-                "t_click_us": [state["c"]],
-                "t_purchase_us": [state["p"]],
-            }
-        )
+        return {
+            "key": key[0],
+            "stage": stage,
+            "t_view_us": state["v"],
+            "t_click_us": state["c"],
+            "t_purchase_us": state["p"],
+        }
 
     def state_schema(self) -> StructType:
         return StructType.fromDDL("v BIGINT, c BIGINT, p BIGINT, m BIGINT")
@@ -264,111 +265,6 @@ class FunnelReducer(EventReducer):
             "key BIGINT, stage INT, t_view_us BIGINT, t_click_us BIGINT, "
             "t_purchase_us BIGINT"
         )
-
-    def state_to_rows(self, state) -> list[tuple]:
-        return [(state["v"], state["c"], state["p"], state["m"])]
-
-    def rows_to_state(self, rows) -> Any:
-        row = rows[0]
-        return {
-            "v": row[0],
-            "c": row[1],
-            "p": row[2],
-            # Checkpoint-compat: round-6 added the max-block lane ``m`` as a
-            # 4th state column. A checkpoint written under the 3-column
-            # schema restores with m=None — the in-order guard re-arms on
-            # the next folded block instead of failing the restore. (Spark's
-            # state-store schema check must also accept the widening; where
-            # it refuses, the documented path is a fresh checkpoint — the
-            # fold itself is replayable from the source's block frontier.)
-            "m": row[3] if len(row) > 3 else None,
-        }
-
-
-class ArrowEventReducer(ABC):
-    """The EventReducer contract over Arrow data — same fold semantics
-    (init -> reduce over block-sorted events -> emit), but ``reduce`` sees a
-    ``pyarrow.Table`` and ``emit`` returns one. Skips the Arrow->pandas
-    materialization ``applyInPandas`` pays on every group (index build,
-    block consolidation, object boxing for strings) — the fold itself runs
-    on the same Arrow buffers Spark transferred."""
-
-    @abstractmethod
-    def init_state(self) -> Any: ...
-
-    @abstractmethod
-    def reduce(self, state: Any, events: "pa.Table") -> Any:
-        """Fold block-sorted events into state; return the new state."""
-
-    @abstractmethod
-    def emit(self, key: tuple, state: Any) -> "pa.Table":
-        """Current aggregate rows for this key (``key`` is a tuple of
-        ``pyarrow.Scalar``)."""
-
-    @abstractmethod
-    def output_schema(self) -> StructType: ...
-
-
-def _sort_table(tbl: "pa.Table") -> "pa.Table":
-    cols = [c for c in ("block_number", "log_index") if c in tbl.column_names]
-    return tbl.sort_by([(c, "ascending") for c in cols]) if cols else tbl
-
-
-def reduce_events_batch_arrow(
-    df: DataFrame, reducer: ArrowEventReducer, key_cols: list[str]
-) -> DataFrame:
-    """Batch fold over ``applyInArrow`` — the keyed-state shape of
-    ``reduce_events_batch`` without the pandas conversion floor.
-
-    Same scale contract: state shards by ``key_cols``, each task folds its
-    keys' sorted rows; Arrow batches go worker->Python with zero-copy column
-    access, so the per-group overhead is the fold itself."""
-    from ..shipping import ship_package
-
-    ship_package(df.sparkSession)
-
-    def fn(key: tuple, tbl: "pa.Table") -> "pa.Table":
-        st = reducer.reduce(reducer.init_state(), _sort_table(tbl))
-        return reducer.emit(key, st)
-
-    return df.groupBy(*key_cols).applyInArrow(fn, schema=reducer.output_schema())
-
-
-class CentsNetflowArrowReducer(ArrowEventReducer):
-    """Arrow twin of CentsNetflowReducer: identical integer-cents state
-    arithmetic (round-half-to-even of value*100, signed sum — bit-identical
-    to the pandas/numpy fold), computed with pyarrow.compute kernels.
-    Expects columns: value (double, 2-decimal), sign (+1/-1)."""
-
-    def init_state(self):
-        return {"cents": 0, "n": 0}
-
-    def reduce(self, state, events: "pa.Table"):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        cents = pc.cast(
-            pc.round(pc.multiply(events.column("value"), pa.scalar(100.0))),
-            pa.int64(),
-        )
-        signed = pc.multiply(cents, pc.cast(events.column("sign"), pa.int64()))
-        state["cents"] += pc.sum(signed).as_py() or 0
-        state["n"] += events.num_rows
-        return state
-
-    def emit(self, key, state) -> "pa.Table":
-        import pyarrow as pa
-
-        return pa.table(
-            {
-                "key": pa.array([key[0].as_py()], pa.int64()),
-                "net_cents": pa.array([state["cents"]], pa.int64()),
-                "n_events": pa.array([state["n"]], pa.int64()),
-            }
-        )
-
-    def output_schema(self) -> StructType:
-        return StructType.fromDDL("key BIGINT, net_cents BIGINT, n_events BIGINT")
 
 
 def with_block_watermark(df: DataFrame, delay_blocks: int = 0) -> DataFrame:
@@ -394,35 +290,21 @@ class SequenceCountReducer(EventReducer):
     def init_state(self):
         return {"last_type": "", "n_matches": 0, "n": 0}
 
-    def reduce(self, state, events: pd.DataFrame):
-        types = events["event_type"]
-        matched = (types == "purchase") & (types.shift(1) == "view")
-        n = int(matched.sum())
-        if state["last_type"] == "view" and len(types) and types.iloc[0] == "purchase":
-            n += 1
-        state["n_matches"] += n
-        state["n"] += int(len(types))
-        if len(types):
-            state["last_type"] = str(types.iloc[-1])
+    def reduce(self, state, events):
+        types = events.column("event_type").to_numpy(zero_copy_only=False)
+        if not len(types):
+            return state
+        prev = np.concatenate(([state["last_type"]], types[:-1]))
+        state["n_matches"] += int(((types == "purchase") & (prev == "view")).sum())
+        state["n"] += len(types)
+        state["last_type"] = str(types[-1])
         return state
 
-    def emit(self, key, state) -> pd.DataFrame:
-        return pd.DataFrame(
-            {
-                "key": [key[0]],
-                "n_matches": [state["n_matches"]],
-                "n_events": [state["n"]],
-            }
-        )
+    def emit(self, key, state):
+        return {"key": key[0], "n_matches": state["n_matches"], "n_events": state["n"]}
 
     def state_schema(self) -> StructType:
         return StructType.fromDDL("last_type STRING, n_matches BIGINT, n BIGINT")
 
     def output_schema(self) -> StructType:
         return StructType.fromDDL("key BIGINT, n_matches BIGINT, n_events BIGINT")
-
-    def state_to_rows(self, state) -> list[tuple]:
-        return [(state["last_type"], state["n_matches"], state["n"])]
-
-    def rows_to_state(self, rows) -> Any:
-        return {"last_type": rows[0][0], "n_matches": rows[0][1], "n": rows[0][2]}

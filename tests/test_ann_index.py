@@ -780,7 +780,10 @@ def test_half_up_micro_matches_spark_round(spark):
         h = k + 0.5
         vals += [h, -h, math.nextafter(h, 0.0), math.nextafter(h, math.inf)]
     vals += [0.0, 1.0, -1.0, 2.4999999, 2.5000001, -2.4999999, 1e-12, -1e-12,
-             0.49999999999999994, 123.456, -123.456]
+             0.49999999999999994, -0.49999999999999994, 123.456, -123.456]
+    # a block of many exact halves of both signs: every one must round
+    # away from zero, not only an isolated suspect
+    vals += [sgn * (k + 0.5) for k in range(0, 3000, 7) for sgn in (1, -1)]
     df = spark.createDataFrame([(v,) for v in vals], "v double")
     got_spark = [
         r["r"]

@@ -213,7 +213,7 @@ def _prep_cents(df):
 
 def test_reducer_stream_matches_batch(source_registered, eth_logs_fixture, tmp_path):
     """B10: the SAME reducer over applyInPandasWithState (stream) and
-    applyInPandas (batch) produces identical state."""
+    applyInArrow (batch) produces identical state."""
     spark = source_registered
     fx, path = eth_logs_fixture
 
@@ -1770,22 +1770,23 @@ def test_stream_cdc_chunking_parity(spark, sf_dir, tmp_path):
     assert got == expected
 
 
-def test_funnel_reducer_restores_legacy_3col_state():
+def test_funnel_reducer_restores_legacy_3col_state(spark):
     """A checkpoint written before the in-order guard stored 3-column
-    funnel state (v, c, p — no max-block lane). rows_to_state must restore
-    it with m=None (guard re-arms on the next folded block) instead of
+    funnel state (v, c, p — no max-block lane). The harness's state restore
+    must give it m=None (guard re-arms on the next folded block) instead of
     crashing the resumed query on an IndexError."""
-    from eth_event_stream_spark.streaming.reducer import FunnelReducer
+    import pyarrow as pa
+
+    from eth_event_stream_spark.streaming.reducer import FunnelReducer, restore_state
 
     r = FunnelReducer()
-    legacy = r.rows_to_state([(100, 200, None)])
+    names = r.state_schema().names
+    legacy = restore_state(names, (100, 200, None))
     assert legacy == {"v": 100, "c": 200, "p": None, "m": None}
-    modern = r.rows_to_state([(100, 200, None, 250)])
+    modern = restore_state(names, (100, 200, None, 250))
     assert modern == {"v": 100, "c": 200, "p": None, "m": 250}
     # and the restored legacy state folds on without tripping the guard
-    import pandas as pd
-
-    out = r.reduce(legacy, pd.DataFrame({"block_number": [300], "event_type": ["purchase"]}))
+    out = r.reduce(legacy, pa.table({"block_number": [300], "event_type": ["purchase"]}))
     assert out["p"] == 300 and out["m"] == 300
 
 

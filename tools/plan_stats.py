@@ -59,7 +59,7 @@ def main() -> None:
                 n(r"\) Exchange"),
                 n(r"\) ReusedExchange"),
                 n(r"\) Scan parquet"),
-                n(r"\) (Batch|Arrow)EvalPython|\) MapInArrow|\) FlatMapGroupsInPandas"),
+                n(r"\) (Batch|Arrow)EvalPython|\) MapInArrow|\) FlatMapGroupsIn(Pandas|Arrow)(WithState)?"),
                 n(r"\) BroadcastHashJoin"),
                 n(r"\) SortMergeJoin"),
                 n(r"\) ShuffledHashJoin"),
