@@ -217,7 +217,7 @@ def _decode_slot(slot: Column, abi_type: str) -> Column:
 
 def topic_slot(topics: Column, i: int) -> Column:
     """i-th topic (0-based) as a 64-char lowercase hex slot (strips 0x)."""
-    return F.lower(F.substring(F.element_at(topics, i + 1), 3, _SLOT_HEX))
+    return F.lower(F.substring(F.get(topics, i), 3, _SLOT_HEX))
 
 
 def data_slot(data_hex: Column, j: int) -> Column:
@@ -418,16 +418,19 @@ def decode_event(
     callers wanting fail-fast semantics use ``assert_no_removed``.
     """
     event = parse_event_declaration(declaration)
-    if event.anonymous:
+    # the topic count is the event's indexed layout: a same-signature event
+    # indexed differently (ERC-20 vs ERC-721 Transfer) is not selected
+    cond = F.size(F.col("topics")) == len(event.indexed_params) + (0 if event.anonymous else 1)
+    if not event.anonymous:
         # anonymous events have no topic0 signature — selection is by
-        # address (and topic count as a weak shape check)
-        cond = F.size(F.col("topics")) == len(event.indexed_params)
-    else:
-        cond = F.element_at(F.col("topics"), 1) == F.lit(event.topic0)
+        # address and topic count alone; `get` is null on an empty array
+        # (a LOG0), where element_at raises under ANSI
+        cond = cond & (F.get(F.col("topics"), 0) == F.lit(event.topic0))
     if address is not None:
         cond = cond & (F.col("address") == F.lit(address.lower()))
     if drop_removed and "removed" in df.columns:
-        cond = cond & (~F.col("removed"))
+        # a null `removed` counts as not removed, as in the eth_logs source
+        cond = cond & ~F.coalesce(F.col("removed"), F.lit(False))
     decoded = decode_columns(event)
     fixed = [
         F.col("block_number").cast("long").alias("block_number"),
@@ -441,14 +444,15 @@ def decode_event(
 
 
 def assert_no_removed(df: DataFrame) -> DataFrame:
-    """Fail-fast reorg policy (stream.rs:174-181): error on removed=true rows.
+    """Fail-fast reorg policy (stream.rs:174-181): error on removed=true
+    rows; a null ``removed`` counts as not removed.
 
     Expressed as a filter on ``assert_true`` so the check runs distributed and
     cannot be pruned away by the optimizer (a dropped projection column would
     be; a filter condition never is).
     """
     check = F.assert_true(
-        ~F.col("removed"),
+        ~F.coalesce(F.col("removed"), F.lit(False)),
         F.lit("removed log encountered — increase confirmation blocks"),
     )
     return df.filter(check.isNull())

@@ -34,7 +34,9 @@ from pyspark.sql import functions as F
 def signature_col(address: Column | None = None, topic0: Column | None = None) -> Column:
     """StreamSignature (sink.rs:34-42) as a single string key ``addr|topic0``."""
     address = address if address is not None else F.col("address")
-    topic0 = topic0 if topic0 is not None else F.element_at(F.col("topics"), 1)
+    # `get` is null on an empty array (a LOG0), where element_at raises
+    # under ANSI; concat_ws skips the null
+    topic0 = topic0 if topic0 is not None else F.get(F.col("topics"), 0)
     return F.concat_ws("|", F.lower(address), F.lower(topic0))
 
 

@@ -33,15 +33,30 @@ under ``_with_retry`` (S6) and returns a ``pyarrow.Table``, and
 with ``pyarrow.compute``. The chunk is cast to ``ETH_LOG_SCHEMA``'s Arrow
 form and handed to Spark as ``RecordBatch``es, so no row is ever a Python
 object on the parquet path.
+
+Batch and stream do not run identically everywhere. ``read_parquet_logs``
+compiles a bounded read of a parquet ``path`` into Spark's native parquet
+scan plus Catalyst predicates, with the same rows, columns and types as
+the Python batch reader; ``StreamFactory`` uses it for every batch read of
+a ``path``, so a historical drain starts no Python planner or worker. Its
+differences: ``pushdown``, ``block_step`` and ``retry_*`` do nothing
+(Spark pushes WHERE clauses into its own scan, partitions follow file
+splits, Spark retries I/O), and a reorg surfaces as Spark's
+``raise_error`` with the same message rather than as ``ReorgError``. The
+Python source stays the reference for it and serves streaming, JSON-RPC
+and direct ``format("eth_logs")`` reads.
 """
 
 from __future__ import annotations
 
 import functools
 import time
+import weakref
 from dataclasses import dataclass
 from typing import TYPE_CHECKING, Iterator
 
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
@@ -136,6 +151,52 @@ class _Options:
             retry_attempts=int(options.get("retry_attempts", 4)),
             retry_base_s=float(options.get("retry_base_ms", 10)) / 1000.0,
         )
+
+
+def read_parquet_logs(spark, options: dict) -> DataFrame:
+    """The bounded ``eth_logs`` read of a parquet ``path`` as a native
+    parquet scan plus Catalyst predicates: the same rows, columns and types
+    as ``spark.read.format("eth_logs").options(**options).load()``, with no
+    Python planner, worker or per-chunk task.
+
+    - blocks ``[from_block, to_block]``, with ``to_block`` defaulting to the
+      chain head; ``confirmation_blocks`` is not applied, as in
+      ``EthLogBatchReader``;
+    - ``address`` matches ``lower(option)`` exactly, as the parquet
+      transport's pushed filter does, so Spark can push it into the scan;
+    - ``topic0`` matches the first topic caselessly; rows with null or
+      empty ``topics`` cannot match;
+    - a null ``removed`` counts as not removed and stays null; a removed
+      row that matches the stream fails the read (``fail_on_removed``, one
+      ``CASE`` over the match, so it cannot fire on a row the filter drops)
+      or is dropped.
+
+    ``pushdown``, ``block_step`` and ``retry_*`` have no effect here: Spark
+    pushes WHERE clauses into its own scan, partitions follow file splits,
+    and Spark retries I/O itself."""
+    o = _Options.parse(options)
+    hi = o.to_block if o.to_block is not None else _chain_head(o.path)
+    df = spark.read.parquet(o.path).select(
+        *[F.col(f.name).cast(f.dataType).alias(f.name) for f in ETH_LOG_SCHEMA.fields]
+    )
+    block = F.col("block_number")
+    match = (block >= o.from_block) & (block <= hi)
+    if o.address is not None:
+        match = match & (F.col("address") == F.lit(o.address.lower()))
+    if o.topic0 is not None:
+        match = match & (F.lower(F.get(F.col("topics"), 0)) == F.lit(o.topic0.lower()))
+    removed = F.coalesce(F.col("removed"), F.lit(False))
+    if not o.fail_on_removed:
+        return df.filter(match & ~removed)
+    reorg = F.raise_error(
+        F.concat(
+            F.lit("removed log at block "),
+            block.cast("string"),
+            F.lit(" — increase confirmation_blocks"),
+        )
+    )
+    # `match` stands alone as well so its range and address reach the scan
+    return df.filter(match & F.when(match & removed, reorg).otherwise(match))
 
 
 @dataclass
@@ -460,10 +521,20 @@ class EthLogDataSource(DataSource):
         return EthLogStreamReader(self.options)
 
 
+# sessions the source is registered in; a stopped session's entry goes with
+# it, and a new session is a new object, so no key is ever reused
+_REGISTERED: weakref.WeakSet = weakref.WeakSet()
+
+
 def register(spark) -> None:
+    """Register ``eth_logs`` in ``spark``, once per session: registering
+    again re-pickles the source and Spark warns that it was replaced."""
+    if spark in _REGISTERED:
+        return
     from ..shipping import ship_package
 
     ship_package(spark)  # workers must import this module to unpickle the source
     # allow WHERE clauses to reach pushFilters (off by default in Spark 4.1)
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     spark.dataSource.register(EthLogDataSource)
+    _REGISTERED.add(spark)

@@ -5,12 +5,18 @@ examples/stream_multi.rs:90-106): a factory holds shared range/confirmation/
 chunk config; each ``make(address, event)`` registers one (address, topic0)
 stream into a shared sink; consumers read block-aligned merged batches.
 
-Spark shape: each ``make`` contributes one source DataFrame (same custom
-``eth_logs`` source, per-stream address+topic0 pushdown); ``sink()`` is their
-``unionByName`` tagged with the stream signature — the S8 fan-in — already
-deduped (B4) and ready for block-aligned consumption. Works identically for
-``spark.read`` (historical drain) and ``spark.readStream`` (live tail): the
-unified API the reference sells (README.md:15).
+Spark shape: each ``make`` contributes one source DataFrame per stream;
+``sink()`` is their ``unionByName`` tagged with the stream signature — the
+S8 fan-in — already deduped (B4) and ready for block-aligned consumption.
+The same options serve ``spark.read`` (historical drain) and
+``spark.readStream`` (live tail), the unified API the reference sells
+(README.md:15), but they compile to two plans. A batch read of a parquet
+``path`` is ``block_source.read_parquet_logs``: Spark's native parquet
+scan plus Catalyst predicates, with no Python planner or worker. Its
+differences from the ``eth_logs`` source it reproduces: ``block_step``
+and the retry options do nothing, and a reorg fails through Spark's
+``raise_error`` with the source's message. A stream, or any read over
+``rpc_url``, goes through the Python ``eth_logs`` source.
 """
 
 from __future__ import annotations
@@ -21,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.schema import EventSchema, parse_event_declaration
+from .block_source import read_parquet_logs
 from .block_source import register as _register_source
 
 
@@ -66,24 +73,25 @@ class StreamFactory:
         return handle
 
     def _one(self, h: StreamHandle, streaming: bool, fail_on_removed: bool) -> DataFrame:
-        reader = self.spark.readStream if streaming else self.spark.read
-        reader = reader.format("eth_logs")
+        opts = {
+            "from_block": self.from_block,
+            "confirmation_blocks": self.confirmation_blocks,
+            "block_step": self.block_step,
+            "address": h.address,
+            "topic0": h.event.topic0,
+            "fail_on_removed": str(fail_on_removed).lower(),
+        }
         if self.rpc_url is not None:
-            reader = reader.option("rpc_url", self.rpc_url)
+            opts["rpc_url"] = self.rpc_url
         else:
-            reader = reader.option("path", self.path)
-        reader = reader.option("from_block", self.from_block)
+            opts["path"] = self.path
         if self.to_block is not None:  # omit => unbounded (head-following)
-            reader = reader.option("to_block", self.to_block)
-        df = (
-            reader
-            .option("confirmation_blocks", self.confirmation_blocks)
-            .option("block_step", self.block_step)
-            .option("address", h.address)
-            .option("topic0", h.event.topic0)
-            .option("fail_on_removed", str(fail_on_removed).lower())
-            .load()
-        )
+            opts["to_block"] = self.to_block
+        if not streaming and "path" in opts:
+            df = read_parquet_logs(self.spark, opts)
+        else:
+            reader = self.spark.readStream if streaming else self.spark.read
+            df = reader.format("eth_logs").options(**opts).load()
         return df.withColumn("sig", F.lit(h.signature))
 
     def sink(self, streaming: bool = False, fail_on_removed: bool = True) -> DataFrame:

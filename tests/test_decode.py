@@ -425,3 +425,54 @@ def test_sum_uint256_case_insensitive_prefix_and_digits(spark):
     assert results[0] == results[1] == results[2]
     total = results[0][1] * 2**192 + results[0][2] * 2**96 + results[0][3]
     assert total == sum(vals)
+
+
+def _logs(spark, rows):
+    """A raw-log frame from (address, topics, data, block, removed) rows."""
+    from eth_event_stream_spark.sources.block_source import ETH_LOG_SCHEMA
+
+    return spark.createDataFrame(
+        [(a, t, d, b, 0, "0x0", r) for a, t, d, b, r in rows], ETH_LOG_SCHEMA
+    )
+
+
+def _transfer_topics(tail=()):
+    from eth_event_stream_spark.sources.fixtures import TRANSFER_TOPIC0
+
+    pad = "0x" + "00" * 12
+    return [TRANSFER_TOPIC0, pad + "11" * 20, pad + "22" * 20, *tail]
+
+
+def test_null_removed_counts_as_not_removed(spark):
+    """A null ``removed`` is not removed, as in the eth_logs source: decode
+    keeps it and ``assert_no_removed`` lets it through."""
+    value = (5).to_bytes(32, "big")
+    df = _logs(
+        spark,
+        [(ADDR_A, _transfer_topics(), value, b, r) for b, r in [(1, None), (2, False), (3, True)]],
+    )
+    got = sorted(r["block_number"] for r in decode_event(df, TRANSFER_DECL).collect())
+    assert got == [1, 2]
+    assert assert_no_removed(df.filter("block_number < 3")).count() == 2
+    with pytest.raises(Exception, match="confirmation blocks"):
+        assert_no_removed(df).count()
+
+
+def test_decode_selects_by_topic_layout_under_ansi(spark):
+    """Under ANSI a LOG0 (empty ``topics``) and a null ``topics`` are not
+    selected instead of failing the read, and a same-signature event with
+    another indexed layout (ERC-721 ``Transfer``, tokenId indexed) is not
+    selected."""
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    value = (7).to_bytes(32, "big")
+    df = _logs(
+        spark,
+        [
+            (ADDR_A, [], b"", 1, False),
+            (ADDR_A, None, b"", 2, False),
+            (ADDR_A, _transfer_topics(["0x" + "00" * 31 + "09"]), b"", 3, False),
+            (ADDR_A, _transfer_topics(), value, 4, False),
+        ],
+    )
+    out = decode_event(df, TRANSFER_DECL).collect()
+    assert [(r["block_number"], r["value"]) for r in out] == [(4, 7)]

@@ -1171,6 +1171,169 @@ def test_pushdown_address_is_exact_option_address_is_lowercased(tmp_path):
     assert _read_addresses(reader2, parts2) == ["0xabcd"]
 
 
+# --- native parquet batch read: read_parquet_logs against the Python reader ---
+
+_A, _B, _C = "0x" + "aa" * 20, "0x" + "bb" * 20, "0x" + "Ab" * 20  # _C: checksummed
+_T0, _T1, _TX = "0x" + "dd" * 32, "0x" + "11" * 32, "0x" + "ee" * 32
+
+
+def _parity_table():
+    """Logs over blocks 1-6 with every edge the two readers must agree on:
+    a checksummed stored address, null and empty ``topics``, a null first
+    topic, an upper-case stored topic0, null and true ``removed``, and a
+    duplicate (block_number, log_index)."""
+    import pyarrow as pa
+
+    from eth_event_stream_spark.sources.block_source import _arrow_schema
+
+    rows = [  # address, topics, block, log_index, tx, removed
+        (_A, [_T0, _T1], 1, 0, "0x01", False),
+        (_A, [_T0], 1, 0, "0x02", None),  # duplicate (1, 0)
+        (_A, [_T0.upper().replace("0X", "0x")], 2, 0, "0x03", None),
+        (_A, [], 2, 1, "0x04", False),  # LOG0
+        (_A, None, 3, 0, "0x05", None),
+        (_C, [_T0], 3, 1, "0x06", False),
+        (_A, [_TX], 4, 0, "0x07", True),  # removed, another event
+        (_B, [_T0], 5, 0, "0x08", True),  # removed, another contract
+        (_A, [_T0], 6, 0, "0x09", False),
+        (_A, [None], 6, 1, "0x0a", False),
+    ]
+    names = ["address", "topics", "block_number", "log_index", "transaction_hash", "removed"]
+    cols = {n: [r[i] for r in rows] for i, n in enumerate(names)}
+    cols["data"] = [bytes([i]) * 32 for i in range(len(rows))]
+    schema = _arrow_schema()
+    return pa.table({f.name: pa.array(cols[f.name], f.type) for f in schema}, schema=schema)
+
+
+@pytest.fixture(scope="module")
+def parity_stores(tmp_path_factory):
+    """The parity table as written canonically, and as an int32 /
+    large_string store with an extra column."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    tbl = _parity_table()
+    d = tmp_path_factory.mktemp("parity")
+    canonical, narrow = str(d / "canonical.parquet"), str(d / "narrow.parquet")
+    pq.write_table(tbl, canonical)
+    retype = {"block_number": pa.int32(), "log_index": pa.int32(),
+              "address": pa.large_string(), "transaction_hash": pa.large_string()}
+    narrow_tbl = tbl.cast(
+        pa.schema([f.with_type(retype.get(f.name, f.type)) for f in tbl.schema])
+    ).append_column("extra", pa.array(range(tbl.num_rows), pa.int64()))
+    pq.write_table(narrow_tbl, narrow)
+    return canonical, narrow
+
+
+_PARITY_OPTIONS = {
+    "everything_to_head": {"fail_on_removed": "false"},
+    "stream_filter_skips_removed": {"address": _A, "topic0": _T0, "from_block": "1", "to_block": "6"},
+    "caseless_option_address_and_topic0": {"address": _A.upper().replace("0X", "0x"), "topic0": _T0.upper()},
+    "checksummed_store_never_matches": {"address": _C, "fail_on_removed": "false"},
+    "lowercased_checksummed_option": {"address": _C.lower(), "fail_on_removed": "false"},
+    "range_and_address": {"address": _A, "from_block": "2", "to_block": "4", "fail_on_removed": "false"},
+    "from_after_to": {"from_block": "5", "to_block": "2"},
+    "ignored_options": {"from_block": "3", "fail_on_removed": "false", "pushdown": "true",
+                        "block_step": "1", "retry_attempts": "1", "confirmation_blocks": "5"},
+}
+
+
+@pytest.mark.parametrize("name", sorted(_PARITY_OPTIONS))
+@pytest.mark.parametrize("store", [0, 1], ids=["canonical", "int32_large_string"])
+def test_read_parquet_logs_matches_python_reader(source_registered, parity_stores, name, store):
+    """The native parquet read returns the Python ``eth_logs`` reader's
+    rows and schema for the same options."""
+    from eth_event_stream_spark.sources.block_source import ETH_LOG_SCHEMA, read_parquet_logs
+
+    spark = source_registered
+    opts = {"path": parity_stores[store], **_PARITY_OPTIONS[name]}
+    want = spark.read.format("eth_logs").options(**opts).load()
+    got = read_parquet_logs(spark, opts)
+    assert got.schema == want.schema == ETH_LOG_SCHEMA
+    assert sorted(got.collect(), key=repr) == sorted(want.collect(), key=repr)
+
+
+@pytest.mark.parametrize(
+    "opts,block",
+    [({"address": _B}, 5), ({"topic0": _TX.upper(), "from_block": "1"}, 4)],
+    ids=["address", "topic0"],
+)
+def test_read_parquet_logs_reorg_matches_python_reader(source_registered, parity_stores, opts, block):
+    """A removed log that passes the stream filter fails both reads with
+    the same message."""
+    from eth_event_stream_spark.sources.block_source import read_parquet_logs
+
+    spark = source_registered
+    opts = {"path": parity_stores[0], **opts}
+    msg = f"removed log at block {block} — increase confirmation_blocks"
+    with pytest.raises(Exception, match=msg):
+        spark.read.format("eth_logs").options(**opts).load().collect()
+    with pytest.raises(Exception, match=msg):
+        read_parquet_logs(spark, opts).collect()
+
+
+def test_factory_batch_sink_reorg_fails(spark, eth_logs_fixture):
+    """S7 through the factory: with default options a batch sink over a
+    table holding removed logs fails the drain."""
+    from eth_event_stream_spark.sources.factory import StreamFactory
+    from eth_event_stream_spark.sources.fixtures import ADDR_B, TRANSFER_DECL
+
+    fx, path = eth_logs_fixture
+    factory = StreamFactory(spark, path=path, from_block=fx.from_block, to_block=fx.to_block)
+    factory.make(ADDR_A, TRANSFER_DECL)
+    factory.make(ADDR_B, TRANSFER_DECL)
+    with pytest.raises(Exception, match="confirmation_blocks"):
+        factory.sink().count()
+
+
+def test_factory_batch_sink_plan_has_no_python(spark, eth_logs_fixture):
+    """A batch sink over a parquet path runs on Spark's own parquet scan:
+    its executed plan has no Python data-source scan or Python operator."""
+    import re
+
+    from eth_event_stream_spark.sources.factory import StreamFactory
+    from eth_event_stream_spark.sources.fixtures import ADDR_B, TRANSFER_DECL
+
+    fx, path = eth_logs_fixture
+    factory = StreamFactory(
+        spark, path=path, from_block=fx.from_block, to_block=fx.to_block, confirmation_blocks=0
+    )
+    factory.make(ADDR_A, TRANSFER_DECL)
+    factory.make(ADDR_B, TRANSFER_DECL)
+    df = factory.sink(fail_on_removed=False)
+    assert df.count() > 0
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "FileScan parquet" in plan
+    assert not re.search(r"Python|BatchScan|EvalPython|MapInArrow|FlatMapGroupsIn", plan), plan
+
+
+def test_register_once_per_session(spark, tmp_path, monkeypatch):
+    """The source is registered once per session, however many factories
+    are built on it (each re-registration re-pickled the source and made
+    Spark warn that it was replaced)."""
+    import weakref
+
+    from pyspark.sql.datasource import DataSourceRegistration
+
+    from eth_event_stream_spark.sources import block_source as bs
+    from eth_event_stream_spark.sources.factory import StreamFactory
+
+    calls = []
+    real = DataSourceRegistration.register
+    monkeypatch.setattr(
+        DataSourceRegistration, "register", lambda self, ds: calls.append(ds) or real(self, ds)
+    )
+    monkeypatch.setattr(bs, "_REGISTERED", weakref.WeakSet())  # as in a fresh session
+    path = str(tmp_path / "logs.parquet")
+    _write_logs_parquet(path, ["0xaa"])
+    for _ in range(3):
+        StreamFactory(spark, path=path)
+    register_source(spark)
+    assert calls == [bs.EthLogDataSource]
+    assert spark.read.format("eth_logs").option("path", path).option("to_block", "0").load().count() == 1
+
+
 def _stateless_core(name):
     from eth_event_stream_spark.plans import pipeline as pl
 

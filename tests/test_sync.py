@@ -22,6 +22,7 @@ from eth_event_stream_spark.operators.sync import (
     dedup_logs,
     flush_including,
     synced_events,
+    tag_signature,
     watermark_block,
 )
 
@@ -126,3 +127,14 @@ def test_block_batches_with_remainder(spark):
         for r in out.groupBy("batch_id").agg(F.count("*").alias("n")).collect()
     }
     assert got == {0: 4, 1: 4, 2: 3}  # 10-13, 14-17, 18-20 (remainder)
+
+
+def test_tag_signature_null_safe_under_ansi(spark):
+    """A log with empty or null ``topics`` (a LOG0) tags as its address
+    alone instead of failing the read under ANSI."""
+    df = spark.createDataFrame(
+        [("0xAA", ["0xT0", "0x1"]), ("0xBB", []), ("0xCC", None)],
+        "address string, topics array<string>",
+    )
+    got = sorted(r["sig"] for r in tag_signature(df).collect())
+    assert got == ["0xaa|0xt0", "0xbb", "0xcc"]
