@@ -1418,30 +1418,48 @@ _SQL_REDUCER_NETFLOW = """
     """
 
 
-@register(
-    "reducer_netflow_arrow",
-    oracle=_SQL_REDUCER_NETFLOW,
-    doc="reducer_netflow_batch under its earlier Arrow-twin name: the one "
-    "EventReducer batch runner is applyInArrow, so both names run one body.",
-)
-@register("reducer_netflow_batch", oracle=_SQL_REDUCER_NETFLOW)
-def reducer_netflow_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The stateful EventReducer API (sink.rs:125-151) in batch form:
-    applyInArrow folds block-sorted events per key. State arithmetic is in
-    integer cents — exact, so the Python fold matches the SQL oracle.
-
-    Here to exercise the stateful path end-to-end; the algebraic equivalent
-    (flagship_user_netflow) is the production shape for this fold."""
-    from ..streaming.reducer import CentsNetflowReducer, reduce_events_batch
-
-    ev = t(spark, sf_dir, "events").select(
+def _netflow_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return t(spark, sf_dir, "events").select(
         F.col("user_id"),
         F.col("value"),
         F.when(F.col("event_type") == "purchase", -1).otherwise(1).alias("sign"),
         (F.unix_timestamp("ts")).alias("block_number"),
         F.col("event_id").alias("log_index"),
     )
-    return reduce_events_batch(ev, CentsNetflowReducer(), ["user_id"])
+
+
+@register(
+    "reducer_netflow_batch",
+    oracle=_SQL_REDUCER_NETFLOW,
+    doc="The stateful EventReducer API (sink.rs:125-151) in batch form, "
+    "lowered: CentsNetflowReducer's aggregate() compiles to a Catalyst "
+    "groupBy().agg(), with no Python worker.",
+)
+def reducer_netflow_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The stateful EventReducer API (sink.rs:125-151) in batch form. The
+    reducer is algebraic, so the runner compiles it to a Catalyst
+    aggregate; state arithmetic is in integer cents, exact, so it matches
+    the SQL oracle. Its Python fold is ``reducer_netflow_arrow``."""
+    from ..streaming.reducer import CentsNetflowReducer, reduce_events_batch
+
+    return reduce_events_batch(_netflow_events(spark, sf_dir), CentsNetflowReducer(), ["user_id"])
+
+
+@register(
+    "reducer_netflow_arrow",
+    oracle=_SQL_REDUCER_NETFLOW,
+    doc="reducer_netflow_batch's fold in Python: the generic EventReducer "
+    "batch runner, applyInArrow folding block-sorted events per key.",
+)
+def reducer_netflow_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The same netflow through the generic batch runner: a fold-only
+    reducer, so ``applyInArrow`` folds each key's block-sorted events in
+    Python. Same oracle as ``reducer_netflow_batch``."""
+    from ..streaming.reducer import CentsNetflowFoldReducer, reduce_events_batch
+
+    return reduce_events_batch(
+        _netflow_events(spark, sf_dir), CentsNetflowFoldReducer(), ["user_id"]
+    )
 
 
 @register(

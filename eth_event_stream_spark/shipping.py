@@ -18,6 +18,12 @@ import os
 import tempfile
 import zipfile
 
+# A physical-plan node that runs Python, as Spark prints it: an
+# EvalPython/AggregatePython/WindowPython operator, a map or grouped map
+# over Arrow or pandas, a stateful pandas/PySpark operator, or a Python
+# data-source scan (BatchScan: this engine's only v2 sources are Python).
+PYTHON_PLAN_NODE = r"Python|BatchScan|(MapIn|GroupsIn)Arrow|In(Pandas|PySpark)"
+
 _SHIPPED: set[int] = set()  # id(sparkContext) already handled
 _BY_VALUE: set[str] = set()  # module names already registered
 

@@ -176,7 +176,7 @@ def read_parquet_logs(spark, options: dict) -> DataFrame:
     and Spark retries I/O itself."""
     o = _Options.parse(options)
     hi = o.to_block if o.to_block is not None else _chain_head(o.path)
-    df = spark.read.parquet(o.path).select(
+    df = spark.read.schema(_stored_schema(o.path)).parquet(o.path).select(
         *[F.col(f.name).cast(f.dataType).alias(f.name) for f in ETH_LOG_SCHEMA.fields]
     )
     block = F.col("block_number")
@@ -259,6 +259,19 @@ def _chain_head(path: str) -> int:
     if not maxima:  # stats missing: fall back to a scan of the one column
         return int(pc.max(pq.read_table(path, columns=["block_number"])[0]).as_py())
     return int(max(maxima))
+
+
+def _stored_schema(path: str) -> StructType:
+    """The ``ETH_LOG_SCHEMA`` columns with the types the parquet footer
+    stores, read on the driver: handed to ``spark.read.schema``, it spares
+    the one-task job Spark runs to infer a parquet schema."""
+    import pyarrow.dataset as ds
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    stored = ds.dataset(path, format="parquet").schema
+    return StructType(
+        [StructField(n, from_arrow_type(stored.field(n).type)) for n in _COLS if n in stored.names]
+    )
 
 
 def _head_of(o: _Options) -> int:
@@ -528,7 +541,12 @@ _REGISTERED: weakref.WeakSet = weakref.WeakSet()
 
 def register(spark) -> None:
     """Register ``eth_logs`` in ``spark``, once per session: registering
-    again re-pickles the source and Spark warns that it was replaced."""
+    again re-pickles the source and Spark warns that it was replaced.
+
+    Each session, ``newSession()`` ones included, has its own registry.
+    Spark checks a new name against the JVM's active session, which a
+    ``newSession()`` does not become, so the registration runs with
+    ``spark`` made active and then restores the previous one."""
     if spark in _REGISTERED:
         return
     from ..shipping import ship_package
@@ -536,5 +554,14 @@ def register(spark) -> None:
     ship_package(spark)  # workers must import this module to unpickle the source
     # allow WHERE clauses to reach pushFilters (off by default in Spark 4.1)
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    spark.dataSource.register(EthLogDataSource)
+    jvm_session = spark._jvm.org.apache.spark.sql.classic.SparkSession
+    prev = jvm_session.getActiveSession()
+    jvm_session.setActiveSession(spark._jsparkSession)
+    try:
+        spark.dataSource.register(EthLogDataSource)
+    finally:
+        if prev.isDefined():
+            jvm_session.setActiveSession(prev.get())
+        else:
+            jvm_session.clearActiveSession()
     _REGISTERED.add(spark)

@@ -4,14 +4,18 @@ The reference folds reducers over dense, block-sorted event batches
 (the reference's eth_event_stream/src/sink.rs:125-151: ``reduce(&mut self,
 block_number, ordered_events)``), with state living in the reducer struct.
 
-Spark decomposition (SURVEY §7.4.3):
+Spark decomposition (SURVEY §7.4.3): ONE contract, ``EventReducer``, whose
+``reduce`` folds a block-sorted ``pyarrow.Table``, and two runners that
+hand it the same Arrow types (the reference's historical/live
+unification). The runners lower algebraic reducers:
 
-- **Algebraic folds** (netflow, counters) degenerate to ``groupBy().agg()`` —
-  use the plans layer; never pay for ordered state you don't need.
-- **Order-dependent / general state** uses this module: ONE contract,
-  ``EventReducer``, whose ``reduce`` folds a block-sorted ``pyarrow.Table``,
-  and two runners that hand it the same Arrow types (the reference's
-  historical/live unification):
+- **Algebraic reducers** (sums, counts) also return their fold as Catalyst
+  aggregates from ``aggregate()``. Both runners then compile to
+  ``groupBy(*key_cols).agg(...)`` — a plain aggregate in batch, a native
+  streaming aggregate (state store, update mode) in a stream — with no
+  Python worker; the Python fold stays the parity reference.
+- **Fold reducers** (``aggregate()`` returns ``None``: order-dependent or
+  general state) run the Python fold:
   - batch, ``reduce_events_batch``: ``applyInArrow`` over the key, one
     fold per key from ``init_state()``;
   - stream, ``reduce_events_stream``: ``applyInPandasWithState`` in update
@@ -25,10 +29,12 @@ it; a stored row shorter than the schema restores its missing trailing
 fields as ``None``, so a field appended to a state schema keeps older
 checkpoints restorable.
 
-Limit (PySpark's, not this module's): ``applyInPandasWithState`` hands a
-nullable BIGINT column to Python as float64, so values above 2^53 arrive
-rounded before any user code runs; the typed Arrow conversion cannot
-restore them. The batch runner has no such limit.
+Limit (PySpark's, not this module's), for fold reducers on the stream
+runner only: ``applyInPandasWithState`` hands a BIGINT column that holds a
+null among a key's rows of one trigger to Python as float64, so values
+above 2^53 arrive rounded before any user code runs; the typed Arrow
+conversion cannot restore them. The batch runner and lowered reducers have
+no such limit; the fold's state itself round-trips exactly.
 
 State is partitioned by ``key_cols`` — the scale contract: the reference's
 single ``Arc<Mutex<State>>`` becomes N independent shards; anything global
@@ -44,7 +50,7 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -79,6 +85,12 @@ class EventReducer(ABC):
     @abstractmethod
     def output_schema(self) -> StructType: ...
 
+    def aggregate(self) -> list[Column] | None:
+        """The fold as Catalyst aggregates over the input columns, one per
+        non-key ``output_schema`` field in order (the runner names and casts
+        them), or ``None``: the fold is not algebraic and runs in Python."""
+        return None
+
 
 def restore_state(names: list[str], row) -> dict[str, Any]:
     """The state dict from a stored state row; fields past the end of a
@@ -95,6 +107,24 @@ def _sort_events(events: pa.Table) -> pa.Table:
     return events.sort_by(keys) if keys else events
 
 
+def _lower(df: DataFrame, reducer: EventReducer, key_cols: list[str]) -> DataFrame | None:
+    """``groupBy(*key_cols).agg(*reducer.aggregate())`` with the keys and
+    aggregates renamed and cast to ``output_schema``, or ``None`` for a fold
+    reducer."""
+    aggs = reducer.aggregate()
+    if aggs is None:
+        return None
+    out = reducer.output_schema()
+    keys, vals = out.fields[: len(key_cols)], out.fields[len(key_cols) :]
+    if len(aggs) != len(vals):
+        raise ValueError(f"aggregate() returned {len(aggs)} columns for {len(vals)} output fields")
+    return (
+        df.groupBy(*[F.col(c).alias(f.name) for c, f in zip(key_cols, keys)])
+        .agg(*[a.alias(f.name) for a, f in zip(aggs, vals)])
+        .select(*[F.col(f.name).cast(f.dataType) for f in out.fields])
+    )
+
+
 def reduce_events_stream(
     df: DataFrame, reducer: EventReducer, key_cols: list[str]
 ) -> DataFrame:
@@ -102,8 +132,13 @@ def reduce_events_stream(
 
     Each trigger: state <- reduce(state, sorted new events); emit current
     aggregates. Exactly the consumer loop of sink.rs:134-151 with Spark's
-    state store replacing the Arc<Mutex<..>>.
+    state store replacing the Arc<Mutex<..>>. A reducer with ``aggregate()``
+    compiles to a native streaming aggregate instead (write it in update
+    mode).
     """
+    lowered = _lower(df, reducer, key_cols)
+    if lowered is not None:
+        return lowered
     from ..shipping import ship_package
 
     ship_package(df.sparkSession)
@@ -143,7 +178,11 @@ def reduce_events_batch(
 ) -> DataFrame:
     """Batch fold: the SAME reducer over applyInArrow (historical drain).
     Each task folds its keys' sorted rows on the Arrow buffers Spark
-    transferred — no per-group pandas materialization."""
+    transferred — no per-group pandas materialization. A reducer with
+    ``aggregate()`` compiles to ``groupBy().agg()`` instead."""
+    lowered = _lower(df, reducer, key_cols)
+    if lowered is not None:
+        return lowered
     from ..shipping import ship_package
 
     ship_package(df.sparkSession)
@@ -164,8 +203,15 @@ class CentsNetflowReducer(EventReducer):
     state — cross-engine-exact (the oracle-checkable variant; SURVEY
     §7.4.1's "do no worse than the reference's lossy i128" applied to
     doubles). Cents are value*100 rounded half to even (``pc.round``'s
-    default, as numpy's), signed and summed. Expects columns: value
-    (double, 2-decimal), sign (+1/-1)."""
+    default, as numpy's), signed and summed; a null value counts as an
+    event with no cents. Expects columns: value (double, 2-decimal), sign
+    (+1/-1).
+
+    ``aggregate`` is the same fold in Catalyst. ``bround`` rounds a double
+    through its shortest decimal string, which lies on the same side of .5
+    as the double itself, so both round every finite value alike. Both
+    raise where cents, a signed cent or a key's total leave BIGINT (Spark's
+    ANSI sum may also raise on a partial sum that leaves it)."""
 
     def init_state(self):
         return {"cents": 0, "n": 0}
@@ -175,10 +221,23 @@ class CentsNetflowReducer(EventReducer):
             pc.round(pc.multiply(events.column("value"), pa.scalar(100.0))),
             pa.int64(),
         )
-        signed = pc.multiply(cents, pc.cast(events.column("sign"), pa.int64()))
-        state["cents"] += pc.sum(signed).as_py() or 0
+        signed = pc.multiply_checked(cents, pc.cast(events.column("sign"), pa.int64()))
+        # an int64 sum wraps; a decimal one holds any total, and emit's
+        # BIGINT output then raises on one out of range, as Spark does
+        total = pc.sum(pc.cast(signed, pa.decimal128(38, 0))).as_py()
+        state["cents"] += int(total or 0)
         state["n"] += events.num_rows
         return state
+
+    def aggregate(self):
+        cents = F.bround(F.col("value") * 100.0, 0)
+        # Spark's ANSI cast saturates at exactly 2^63 (its bound is
+        # Long.MaxValue as a double), where Arrow's cast raises
+        cents = F.when(
+            cents >= F.lit(2.0**63), F.raise_error(F.lit("cents out of BIGINT range"))
+        ).otherwise(cents)
+        signed = cents.cast("bigint") * F.col("sign").cast("bigint")
+        return [F.coalesce(F.sum(signed), F.lit(0)), F.count(F.lit(1))]
 
     def emit(self, key, state):
         return {"key": key[0], "net_cents": state["cents"], "n_events": state["n"]}
@@ -188,6 +247,15 @@ class CentsNetflowReducer(EventReducer):
 
     def output_schema(self) -> StructType:
         return StructType.fromDDL("key BIGINT, net_cents BIGINT, n_events BIGINT")
+
+
+class CentsNetflowFoldReducer(CentsNetflowReducer):
+    """``CentsNetflowReducer`` with no ``aggregate``: the runners run its
+    Python fold (``applyInArrow`` in batch, ``applyInPandasWithState`` in a
+    stream), so the generic fold harness is exercised by the same fold."""
+
+    def aggregate(self):
+        return None
 
 
 # The benchmark's drain (perfbench/drain.py) imports the names of the former

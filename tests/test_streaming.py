@@ -7,12 +7,15 @@ from __future__ import annotations
 
 import time
 
+import pyarrow.compute as pc
 import pytest
 from pyspark.sql import functions as F
 
+from eth_event_stream_spark.shipping import PYTHON_PLAN_NODE
 from eth_event_stream_spark.sources.block_source import register as register_source
 from eth_event_stream_spark.sources.fixtures import ADDR_A, TRANSFER_TOPIC0
 from eth_event_stream_spark.streaming.reducer import (
+    CentsNetflowFoldReducer,
     CentsNetflowReducer,
     reduce_events_batch,
     reduce_events_stream,
@@ -213,7 +216,8 @@ def _prep_cents(df):
 
 def test_reducer_stream_matches_batch(source_registered, eth_logs_fixture, tmp_path):
     """B10: the SAME reducer over applyInPandasWithState (stream) and
-    applyInArrow (batch) produces identical state."""
+    applyInArrow (batch) produces identical state. The fold-only netflow
+    keeps both runners on the Python fold."""
     spark = source_registered
     fx, path = eth_logs_fixture
 
@@ -231,7 +235,7 @@ def test_reducer_stream_matches_batch(source_registered, eth_logs_fixture, tmp_p
         r["key"]: (r["net_cents"], r["n_events"])
         for r in reduce_events_batch(
             prepared(batch),
-            CentsNetflowReducer(),
+            CentsNetflowFoldReducer(),
             ["key"],
         ).collect()
     }
@@ -248,7 +252,7 @@ def test_reducer_stream_matches_batch(source_registered, eth_logs_fixture, tmp_p
     )
     sdf = reduce_events_stream(
         prepared(stream),
-        CentsNetflowReducer(),
+        CentsNetflowFoldReducer(),
         ["key"],
     )
     q = (
@@ -582,7 +586,8 @@ def test_reducer_rocksdb_state_store(source_registered, eth_logs_fixture, tmp_pa
     """The large-keyspace state backend: the same stateful reducer under the
     RocksDB state-store provider (the 100 TB configuration — state spills to
     disk instead of living on the JVM heap) produces the same final states
-    as the default HDFS-backed provider."""
+    as the default HDFS-backed provider. The fold-only netflow keeps the
+    stream on applyInPandasWithState's state rows."""
     spark = source_registered
     fx, path = eth_logs_fixture
 
@@ -603,7 +608,7 @@ def test_reducer_rocksdb_state_store(source_registered, eth_logs_fixture, tmp_pa
             .load()
         )
         prepped = _prep_cents(stream)
-        sdf = reduce_events_stream(prepped, CentsNetflowReducer(), ["key"])
+        sdf = reduce_events_stream(prepped, CentsNetflowFoldReducer(), ["key"])
         q = (
             sdf.writeStream.format("memory")
             .queryName("rocksdb_sink")
@@ -659,9 +664,136 @@ def test_reducer_rocksdb_state_store(source_registered, eth_logs_fixture, tmp_pa
     bprep = _prep_cents(batch)
     expected = {
         r["key"]: (r["net_cents"], r["n_events"])
-        for r in reduce_events_batch(bprep, CentsNetflowReducer(), ["key"]).collect()
+        for r in reduce_events_batch(bprep, CentsNetflowFoldReducer(), ["key"]).collect()
     }
     assert got == expected
+
+
+_FLOW_DDL = "key BIGINT, value DOUBLE, sign BIGINT, block_number BIGINT, log_index BIGINT"
+
+
+def _fold_and_aggregate(spark, rows):
+    """CentsNetflowReducer's batch output for ``rows`` through its Python
+    fold and through its lowered aggregate, each as sorted rows or
+    ``"raised"``."""
+    df = spark.createDataFrame(rows, _FLOW_DDL)
+
+    def run(reducer):
+        try:
+            return sorted(tuple(r) for r in reduce_events_batch(df, reducer, ["key"]).collect())
+        except Exception:
+            return "raised"
+
+    return run(CentsNetflowFoldReducer()), run(CentsNetflowReducer())
+
+
+def test_netflow_aggregate_matches_fold(spark):
+    """The lowered netflow equals its Python fold on adversarial values:
+    exact x.5 ties of both signs (half to even), negative values, null
+    values (an event with no cents; a key of only nulls sums to 0) and a
+    key with a single event."""
+    ties = [0.005, 0.015, 0.025, 0.125, 0.375, -0.125, -0.625, -0.035, 1.005, 2.675]
+    rows = [(1, v, 1, i, 0) for i, v in enumerate(ties)]
+    rows += [(2, v, -1, i, 0) for i, v in enumerate(ties)]
+    rows += [(3, -12.34, 1, 0, 0), (3, None, -1, 1, 0), (3, -0.5, -1, 2, 0)]
+    rows += [(4, 7.77, -1, 0, 0), (5, None, 1, 0, 0), (5, None, -1, 1, 0)]
+    fold, agg = _fold_and_aggregate(spark, rows)
+    assert fold != "raised" and fold == agg
+    got = {k: (c, n) for k, c, n in agg}
+    assert got[4] == (-777, 1) and got[5] == (0, 2)
+    # half to even: 0.5 -> 0, 1.5 -> 2, 2.5 -> 2, 12.5 -> 12, 37.5 -> 38,
+    # -12.5 -> -12, -62.5 -> -62, 267.5 -> 268; -0.035 and 1.005 miss .5
+    assert got[1][0] == -got[2][0] == 0 + 2 + 2 + 12 + 38 - 12 - 62 - 4 + 100 + 268
+
+
+@pytest.mark.parametrize(
+    "rows,want",
+    [
+        # cents near int64 max, then cancelled
+        ([(1, 9.2e16, 1, 0, 0), (1, -9.2e16, 1, 1, 0)], [(1, 0, 2)]),
+        # cents exactly 2^63 (Spark's cast alone would saturate)
+        ([(1, 2.0**63 / 100, 1, 0, 0)], "raised"),
+        ([(1, 1e19, 1, 0, 0)], "raised"),  # cents far past int64
+        ([(1, 2.0**62 / 100, 1, 0, 0), (1, 2.0**62 / 100, 1, 1, 0)], "raised"),  # total 2^63
+        ([(1, -(2.0**63) / 100, -1, 0, 0)], "raised"),  # -2^63 cents, negated
+        ([(1, -(2.0**63) / 100, 1, 0, 0)], [(1, -(2**63), 1)]),  # int64 min itself
+    ],
+    ids=["fits", "cents_2p63", "cents_1e21", "sum_2p63", "negate_min", "int64_min"],
+)
+def test_netflow_aggregate_matches_fold_at_int64_extremes(spark, rows, want):
+    """Under ANSI the lowered netflow and its Python fold agree at the
+    int64 edges, or both raise."""
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        fold, agg = _fold_and_aggregate(spark, rows)
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    assert fold == agg == want
+
+
+class _CentsColumnReducer(CentsNetflowReducer):
+    """Sums precomputed cents from a nullable BIGINT ``cents`` column."""
+
+    def reduce(self, state, events):
+        state["cents"] += pc.sum(events.column("cents")).as_py() or 0
+        state["n"] += events.num_rows
+        return state
+
+    def aggregate(self):
+        return [F.coalesce(F.sum("cents"), F.lit(0)), F.count(F.lit(1))]
+
+
+@pytest.mark.parametrize(
+    "reducer", [CentsNetflowReducer(), _CentsColumnReducer()], ids=["netflow", "bigint_cents"]
+)
+def test_cents_past_2p53_batch_matches_stream(spark, tmp_path, reducer):
+    """A key whose cents reach 2^53 + 1 over two triggers reads the same
+    exact total from the batch and the stream runner. With ``bigint_cents``
+    the first trigger holds 2^53 + 1 next to a null in a BIGINT column: a
+    Python fold on the stream would read that column as float64 (2^53),
+    the native streaming aggregate keeps it exact."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    half = 2.0**52 / 100
+    assert round(half * 100) == 2**52
+    src = tmp_path / "flows"
+    src.mkdir()
+    triggers = [([half, half], [2**53 + 1, None]), ([0.01], [0])]
+    for i, (values, cents) in enumerate(triggers):
+        n = len(values)
+        f = str(src / f"part-{i}.parquet")
+        pq.write_table(
+            pa.table({"key": [7] * n, "value": values, "cents": pa.array(cents, pa.int64()),
+                      "sign": [1] * n, "block_number": [i] * n, "log_index": list(range(n))}),
+            f,
+        )
+        os.utime(f, (1_000_000 + i, 1_000_000 + i))  # one file per trigger, in order
+    ddl = f"{_FLOW_DDL}, cents BIGINT"
+    batch = reduce_events_batch(spark.read.schema(ddl).parquet(str(src)), reducer, ["key"])
+    assert [tuple(r) for r in batch.collect()] == [(7, 2**53 + 1, 3)]
+
+    stream = spark.readStream.schema(ddl).option("maxFilesPerTrigger", 1).parquet(str(src))
+    got = {}
+    q = (
+        reduce_events_stream(stream, reducer, ["key"])
+        .writeStream.foreachBatch(
+            lambda b, _: got.update({r["key"]: (r["net_cents"], r["n_events"]) for r in b.collect()})
+        )
+        .outputMode("update")
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        n_triggers = sum(1 for p in q.recentProgress if p["numInputRows"] > 0)
+    finally:
+        q.stop()
+    assert n_triggers == 2
+    assert got == {7: (2**53 + 1, 3)}
 
 
 @pytest.mark.slow  # long stream/batch soak (~31 s) — full tier
@@ -1305,7 +1437,7 @@ def test_factory_batch_sink_plan_has_no_python(spark, eth_logs_fixture):
     df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "FileScan parquet" in plan
-    assert not re.search(r"Python|BatchScan|EvalPython|MapInArrow|FlatMapGroupsIn", plan), plan
+    assert not re.search(PYTHON_PLAN_NODE, plan), plan
 
 
 def test_register_once_per_session(spark, tmp_path, monkeypatch):
@@ -1332,6 +1464,100 @@ def test_register_once_per_session(spark, tmp_path, monkeypatch):
     register_source(spark)
     assert calls == [bs.EthLogDataSource]
     assert spark.read.format("eth_logs").option("path", path).option("to_block", "0").load().count() == 1
+
+
+def test_read_parquet_logs_starts_no_job(source_registered, parity_stores):
+    """Building the native read runs no Spark job: the schema comes from
+    the parquet footer on the driver, not from Spark's inference job."""
+    from eth_event_stream_spark.sources.block_source import ETH_LOG_SCHEMA, read_parquet_logs
+
+    spark = source_registered
+    sc = spark.sparkContext
+    group = "read_parquet_logs_build"
+    sc.setJobGroup(group, "build the read only")
+    try:
+        dfs = [read_parquet_logs(spark, {"path": p}) for p in parity_stores]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert all(df.schema == ETH_LOG_SCHEMA for df in dfs)
+
+
+def test_factory_on_new_session(spark, eth_logs_fixture):
+    """A ``newSession()`` gets the source too: its own registration
+    succeeds, and its ``format("eth_logs")`` reads and factory sinks return
+    the parent session's rows."""
+    from eth_event_stream_spark.sources.factory import StreamFactory
+    from eth_event_stream_spark.sources.fixtures import TRANSFER_DECL
+
+    fx, path = eth_logs_fixture
+    opts = {"path": path, "from_block": fx.from_block, "to_block": fx.to_block,
+            "fail_on_removed": "false"}
+    register_source(spark)
+    want = spark.read.format("eth_logs").options(**opts).load().count()
+    child = spark.newSession()
+    factory = StreamFactory(child, path=path, from_block=fx.from_block, to_block=fx.to_block)
+    factory.make(ADDR_A, TRANSFER_DECL)
+    assert factory.sink(fail_on_removed=False).count() > 0
+    assert child.read.format("eth_logs").options(**opts).load().count() == want
+    # the parent keeps its own registration and stays the active session
+    assert spark.read.format("eth_logs").options(**opts).load().count() == want
+    assert spark._jvm.org.apache.spark.sql.classic.SparkSession.active().equals(
+        spark._jsparkSession
+    )
+
+
+def test_drain_runs_no_python_node(spark, eth_logs_fixture, tmp_path):
+    """The historical drain's shape (factory sink, decode, per-wallet
+    flows, the netflow reducer, block-partitioned sink) runs no Python
+    scan or operator in any of its SQL executions."""
+    import re
+
+    from eth_event_stream_spark.functions.decode import decode_event
+    from eth_event_stream_spark.sources.factory import StreamFactory
+    from eth_event_stream_spark.sources.fixtures import ADDR_B, TRANSFER_DECL
+    from eth_event_stream_spark.sources.sinks import write_block_partitioned
+
+    fx, path = eth_logs_fixture
+    factory = StreamFactory(
+        spark, path=path, from_block=fx.from_block, to_block=fx.to_block, confirmation_blocks=0
+    )
+    factory.make(ADDR_A, TRANSFER_DECL)
+    factory.make(ADDR_B, TRANSFER_DECL)
+    decoded = decode_event(factory.sink(fail_on_removed=False), TRANSFER_DECL)
+    value = (F.col("value") % 1_000_000).cast("double") / 100
+    flows = decoded.select(
+        F.explode(
+            F.array(
+                F.struct(F.crc32("from").alias("key"), value.alias("value"), F.lit(-1).alias("sign")),
+                F.struct(F.crc32("to").alias("key"), value.alias("value"), F.lit(1).alias("sign")),
+            )
+        ).alias("f")
+    ).select("f.*")
+
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def last_execution() -> int:
+        runs = store.executionsList()
+        return runs.apply(runs.size() - 1).executionId() if runs.size() else -1
+
+    first = last_execution() + 1
+    rows = reduce_events_batch(flows, CentsNetflowReducer(), ["key"]).collect()
+    write_block_partitioned(
+        decoded.select("block_number", "log_index", "from", "to"), str(tmp_path / "sink")
+    )
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    runs = store.executionsList()
+    plans = [
+        runs.apply(i).physicalPlanDescription()
+        for i in range(runs.size())
+        if runs.apply(i).executionId() >= first
+    ]
+    assert sum(r["n_events"] for r in rows) == 2 * decoded.count() > 0
+    assert len(plans) >= 2 and any("HashAggregate" in p for p in plans)
+    assert any("InsertIntoHadoopFsRelationCommand" in p for p in plans)
+    for p in plans:
+        assert not re.search(PYTHON_PLAN_NODE, p), p
 
 
 def _stateless_core(name):

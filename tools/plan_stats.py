@@ -8,7 +8,8 @@ and count cheap plan-shape signals in .explain("formatted"):
   exchanges  'Exchange' operator lines (shuffles; excludes reused refs)
   reused     ReusedExchange lines (replication Spark already dedups)
   scans      'Scan parquet' operator lines (in-plan source replication)
-  python     BatchEvalPython/ArrowEvalPython/MapInArrow nodes
+  python     nodes that run Python (shipping.PYTHON_PLAN_NODE), Python
+             data-source scans included
   joins      join operator lines by strategy
 
 Usage: python tools/plan_stats.py [query ...] > /tmp/plan_stats.tsv
@@ -25,6 +26,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from eth_event_stream_spark.plans import QUERIES  # noqa: E402
 from eth_event_stream_spark.session import get_spark  # noqa: E402
+from eth_event_stream_spark.shipping import PYTHON_PLAN_NODE  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -59,7 +61,7 @@ def main() -> None:
                 n(r"\) Exchange"),
                 n(r"\) ReusedExchange"),
                 n(r"\) Scan parquet"),
-                n(r"\) (Batch|Arrow)EvalPython|\) MapInArrow|\) FlatMapGroupsIn(Pandas|Arrow)(WithState)?"),
+                n(PYTHON_PLAN_NODE),
                 n(r"\) BroadcastHashJoin"),
                 n(r"\) SortMergeJoin"),
                 n(r"\) ShuffledHashJoin"),
