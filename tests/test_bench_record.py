@@ -94,10 +94,13 @@ def test_canary_fields_and_warning(tmp_path):
     line itself, so a loaded capture (the r10 driver run) is detectable
     from the record with no external context."""
     timings = {"flagship_user_netflow": 0.3}
+    # the loadavg rule scales by the record's cpus; pin the 32-core
+    # calibration box (bench.py) so the outcome is the same on any host
     quiet = {
         "loadavg_start": [1.0, 1.0, 1.0],
         "loadavg_end": [2.0, 2.0, 2.0],
         "flagship_retime": 0.31,
+        "cpus": 32,
     }
     line = bench.emit_record(timings, "0.1", detail_dir=str(tmp_path), canary=quiet)
     parsed = json.loads(line)
@@ -389,8 +392,10 @@ def test_drift_index_attributes_uniform_ambient_drift(tmp_path):
     (tmp_path / bench.SOLO_REF_NAME).write_text(json.dumps(blessed))
     # uniform 1.42x over blessed rows + one new (unblessed) row
     timings = {"row_a": 1.42, "row_b": 2.84, "row_c": 0.71, "row_new": 9.0}
+    # the loadavg rule scales by the record's cpus; pin the 32-core
+    # calibration box (bench.py) so the outcome is the same on any host
     quiet = {"loadavg_start": [1.0] * 3, "loadavg_end": [2.0] * 3,
-             "flagship_retime": 0.31}
+             "flagship_retime": 0.31, "cpus": 32}
     line = bench.emit_record(
         timings, "0.1", detail_dir=str(tmp_path), canary=quiet
     )
