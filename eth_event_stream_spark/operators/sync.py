@@ -13,7 +13,10 @@ what this module provides is the *semantics* as composable DataFrame ops:
 - ``tag_signature``      — S8 fan-in: tag rows with their stream signature.
 - ``dedup_logs``         — B4 idempotent upsert == dropDuplicates on the key.
 - ``watermark_block``    — B2/B3 min-of-max frontier from per-source
-  punctuation (offset-based, not data-based — SURVEY §7.4.5).
+  punctuation (offset-based, not data-based — SURVEY §7.4.5): the port of
+  sink.rs's test_up_to. The live path needs no call to it: a
+  ``StreamFactory`` reads all its streams through one source, whose one
+  offset is that frontier.
 - ``flush_including``    — B6 dense flush: block-spine join so empty blocks
   emit empty lists.
 - ``synced_events``      — B9 N-way merge to total order.
@@ -40,18 +43,11 @@ def signature_col(address: Column | None = None, topic0: Column | None = None) -
     return F.concat_ws("|", F.lower(address), F.lower(topic0))
 
 
-def tag_signature(df: DataFrame, streams: list[tuple[str, str]] | None = None) -> DataFrame:
-    """Tag rows with their stream signature; optionally keep only registered
-    streams (StreamFactory registration, stream.rs:79-81).
-
-    ``streams`` is a list of (address, topic0). The filter is a Catalyst IN
-    predicate -> pushed to the Parquet scan.
-    """
-    out = df.withColumn("sig", signature_col())
-    if streams is not None:
-        keys = [f"{a.lower()}|{t.lower()}" for a, t in streams]
-        out = out.filter(F.col("sig").isin(keys))
-    return out
+def tag_signature(df: DataFrame) -> DataFrame:
+    """Tag rows with their stream signature. Keeping only the registered
+    streams (stream.rs:79-81) is the ``eth_logs`` read's job: its
+    ``streams`` option."""
+    return df.withColumn("sig", signature_col())
 
 
 def dedup_logs(df: DataFrame) -> DataFrame:

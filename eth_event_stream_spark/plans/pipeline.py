@@ -1410,8 +1410,8 @@ def reducer_funnel_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SQL_REDUCER_NETFLOW = """
     SELECT user_id AS key,
            CAST(SUM(CASE WHEN event_type = 'purchase'
-                         THEN -CAST(ROUND(value * 100, 0) AS BIGINT)
-                         ELSE  CAST(ROUND(value * 100, 0) AS BIGINT) END) AS BIGINT)
+                         THEN -CAST(ROUND_EVEN(value * 100, 0) AS BIGINT)
+                         ELSE  CAST(ROUND_EVEN(value * 100, 0) AS BIGINT) END) AS BIGINT)
              AS net_cents,
            COUNT(*) AS n_events
     FROM events GROUP BY user_id

@@ -13,6 +13,15 @@ Python ``DataSource`` over a log table (parquet) standing in for the chain:
   splits into one task per ``block_step`` range aligned to absolute
   ``block_step`` multiples (``_chunks``) — Spark parallelizes what the
   reference fetches sequentially (stream.rs:214-226).
+- one source serves every stream of a ``StreamFactory``: the ``streams``
+  option lists its ``(address, topic0)`` pairs, so one offset (one head
+  call per trigger) covers all of them and each micro-batch is one block
+  range ``[start, end)`` for every stream — the reference's
+  min-of-per-source-maxima watermark (sink.rs:187-197) by construction.
+  A ``streams`` read is also the Sink's upsert (B4, sink.rs:280-296): it
+  returns each ``(address, topic0, block_number, log_index)`` once. A
+  chunk never crosses a ``block_step`` multiple and each block lies in
+  exactly one chunk, so the per-chunk dedup is global and keeps no state.
 - ``removed`` logs fail the read by default (S7 reorg policy,
   stream.rs:174-181); ``fail_on_removed=false`` drops them instead.
 - a bounded ``[from_block, to_block]`` plus ``Trigger.AvailableNow`` is the
@@ -23,33 +32,37 @@ parquet footer statistics only (no data scan) — the analog of the
 ``BlockNotify`` newHeads subscription (S5, data_feed/block.rs).
 
 Two interchangeable transports behind the same options/semantics:
-``path`` reads a parquet log table (the deterministic test stand-in), and
-``rpc_url`` talks live JSON-RPC (``eth_getLogs`` per chunk +
-``eth_blockNumber`` for the head — sources/rpc.py, the reference's real
-I/O). Both readers share one read path: ``_Options`` parses the options
-once, ``_chunks`` cuts the range, ``_fetch_chunk`` runs one transport call
-under ``_with_retry`` (S6) and returns a ``pyarrow.Table``, and
-``_post_filter`` applies the address/topic0 re-check and the reorg policy
-with ``pyarrow.compute``. The chunk is cast to ``ETH_LOG_SCHEMA``'s Arrow
-form and handed to Spark as ``RecordBatch``es, so no row is ever a Python
+``path`` reads a parquet log table, one file or a directory of them (the
+deterministic test stand-in), and ``rpc_url`` talks live JSON-RPC
+(``eth_getLogs`` per pair per chunk + ``eth_blockNumber`` for the head —
+sources/rpc.py, the reference's real I/O). Both readers share one read
+path: ``_Options`` parses the options once, ``_chunks`` cuts the range,
+``_fetch_chunk`` runs the transport calls under ``_with_retry`` (S6) and
+returns a ``pyarrow.Table``, and ``_post_filter`` applies the caseless
+pair re-check, the reorg policy and a ``streams`` read's upsert with
+``pyarrow.compute``. The chunk is cast to ``ETH_LOG_SCHEMA``'s Arrow form
+and handed to Spark as ``RecordBatch``es, so no row is ever a Python
 object on the parquet path.
 
 Batch and stream do not run identically everywhere. ``read_parquet_logs``
 compiles a bounded read of a parquet ``path`` into Spark's native parquet
-scan plus Catalyst predicates, with the same rows, columns and types as
-the Python batch reader; ``StreamFactory`` uses it for every batch read of
-a ``path``, so a historical drain starts no Python planner or worker. Its
-differences: ``pushdown``, ``block_step`` and ``retry_*`` do nothing
-(Spark pushes WHERE clauses into its own scan, partitions follow file
-splits, Spark retries I/O), and a reorg surfaces as Spark's
-``raise_error`` with the same message rather than as ``ReorgError``. The
-Python source stays the reference for it and serves streaming, JSON-RPC
-and direct ``format("eth_logs")`` reads.
+scan plus Catalyst predicates (and one ``dropDuplicates`` for the upsert),
+with the same rows, columns and types as the Python batch reader;
+``StreamFactory`` uses it for every batch read of a ``path``, so a
+historical drain starts no Python planner or worker. Its differences:
+``pushdown``, ``block_step`` and ``retry_*`` do nothing (Spark pushes WHERE
+clauses into its own scan, partitions follow file splits, Spark retries
+I/O), a reorg surfaces as Spark's ``raise_error`` with the same message
+rather than as ``ReorgError``, and which of two differing rows with one
+upsert key survives is not defined. The Python source stays the reference
+for it and serves streaming, JSON-RPC and direct ``format("eth_logs")``
+reads.
 """
 
 from __future__ import annotations
 
 import functools
+import json
 import time
 import weakref
 from dataclasses import dataclass
@@ -118,7 +131,14 @@ def _arrow_schema() -> pa.Schema:
 
 @dataclass(frozen=True)
 class _Options:
-    """The ``eth_logs`` options, parsed once for either reader."""
+    """The ``eth_logs`` options, parsed once for either reader.
+
+    ``pairs`` is the one log filter: ``(address, topic0)`` pairs, a row
+    matching any of them. A ``streams`` option (a JSON list of
+    ``[address, topic0]``, a factory's registrations) gives them,
+    lowercased and deduplicated, and makes the read an ``upsert``; the
+    ``address``/``topic0`` options give one pair (either may be absent)
+    and a raw read."""
 
     path: str | None
     rpc_url: str | None
@@ -126,8 +146,8 @@ class _Options:
     to_block: int | None
     confirmations: int
     block_step: int
-    address: str | None
-    topic0: str | None
+    pairs: tuple[tuple[str | None, str | None], ...]  # None matches any value
+    upsert: bool
     fail_on_removed: bool
     pushdown: bool
     retry_attempts: int
@@ -137,6 +157,17 @@ class _Options:
     def parse(cls, options: dict) -> _Options:
         if options.get("path") is None and options.get("rpc_url") is None:
             raise ValueError("eth_logs source needs a 'path' or 'rpc_url' option")
+        upsert = options.get("streams") is not None
+        if upsert:
+            if options.get("address") is not None or options.get("topic0") is not None:
+                raise ValueError("eth_logs takes 'streams' or 'address'/'topic0', not both")
+            pairs = tuple(
+                dict.fromkeys((a.lower(), t.lower()) for a, t in json.loads(options["streams"]))
+            )
+            if not pairs:
+                raise ValueError("eth_logs 'streams' lists no (address, topic0) pair")
+        else:
+            pairs = ((options.get("address"), options.get("topic0")),)
         return cls(
             path=options.get("path"),
             rpc_url=options.get("rpc_url"),
@@ -144,13 +175,18 @@ class _Options:
             to_block=int(options["to_block"]) if "to_block" in options else None,
             confirmations=int(options.get("confirmation_blocks", 2)),
             block_step=int(options.get("block_step", 1000)),
-            address=options.get("address"),
-            topic0=options.get("topic0"),
+            pairs=pairs,
+            upsert=upsert,
             fail_on_removed=str(options.get("fail_on_removed", "true")).lower() == "true",
             pushdown=str(options.get("pushdown", "false")).lower() == "true",
             retry_attempts=int(options.get("retry_attempts", 4)),
             retry_base_s=float(options.get("retry_base_ms", 10)) / 1000.0,
         )
+
+    @property
+    def address(self) -> str | None:
+        """The address of a one-pair read, as given."""
+        return self.pairs[0][0] if len(self.pairs) == 1 else None
 
 
 def read_parquet_logs(spark, options: dict) -> DataFrame:
@@ -162,14 +198,17 @@ def read_parquet_logs(spark, options: dict) -> DataFrame:
     - blocks ``[from_block, to_block]``, with ``to_block`` defaulting to the
       chain head; ``confirmation_blocks`` is not applied, as in
       ``EthLogBatchReader``;
-    - ``address`` matches ``lower(option)`` exactly, as the parquet
-      transport's pushed filter does, so Spark can push it into the scan;
-    - ``topic0`` matches the first topic caselessly; rows with null or
+    - a pair's address matches ``lower(address)`` exactly, as the parquet
+      transport's pushed filter does, and the read's addresses form one
+      ``IN`` that Spark pushes into its one scan;
+    - a pair's topic0 matches the first topic caselessly; rows with null or
       empty ``topics`` cannot match;
     - a null ``removed`` counts as not removed and stays null; a removed
-      row that matches the stream fails the read (``fail_on_removed``, one
+      row that matches a pair fails the read (``fail_on_removed``, one
       ``CASE`` over the match, so it cannot fire on a row the filter drops)
-      or is dropped.
+      or is dropped;
+    - a ``streams`` read then keeps one row per ``(address,
+      lower(topics[0]), block_number, log_index)``: one ``dropDuplicates``.
 
     ``pushdown``, ``block_step`` and ``retry_*`` have no effect here: Spark
     pushes WHERE clauses into its own scan, partitions follow file splits,
@@ -179,36 +218,51 @@ def read_parquet_logs(spark, options: dict) -> DataFrame:
     df = spark.read.schema(_stored_schema(o.path)).parquet(o.path).select(
         *[F.col(f.name).cast(f.dataType).alias(f.name) for f in ETH_LOG_SCHEMA.fields]
     )
-    block = F.col("block_number")
+    block, address = F.col("block_number"), F.col("address")
+    topic0 = F.lower(F.get(F.col("topics"), 0))
     match = (block >= o.from_block) & (block <= hi)
-    if o.address is not None:
-        match = match & (F.col("address") == F.lit(o.address.lower()))
-    if o.topic0 is not None:
-        match = match & (F.lower(F.get(F.col("topics"), 0)) == F.lit(o.topic0.lower()))
+    if all(a is not None for a, _ in o.pairs):
+        match = match & address.isin(sorted({a.lower() for a, _ in o.pairs}))
+    pair_match = F.lit(False)
+    for a, t in o.pairs:
+        m = F.lit(True)
+        if a is not None:
+            m = m & (address == F.lit(a.lower()))
+        if t is not None:
+            m = m & (topic0 == F.lit(t.lower()))
+        pair_match = pair_match | m
+    match = match & pair_match
     removed = F.coalesce(F.col("removed"), F.lit(False))
     if not o.fail_on_removed:
-        return df.filter(match & ~removed)
-    reorg = F.raise_error(
-        F.concat(
-            F.lit("removed log at block "),
-            block.cast("string"),
-            F.lit(" — increase confirmation_blocks"),
+        out = df.filter(match & ~removed)
+    else:
+        reorg = F.raise_error(
+            F.concat(
+                F.lit("removed log at block "),
+                block.cast("string"),
+                F.lit(" — increase confirmation_blocks"),
+            )
         )
-    )
-    # `match` stands alone as well so its range and address reach the scan
-    return df.filter(match & F.when(match & removed, reorg).otherwise(match))
+        # `match` stands alone as well so its range and addresses reach the scan
+        out = df.filter(match & F.when(match & removed, reorg).otherwise(match))
+    if not o.upsert:
+        return out
+    key = ["address", "_topic0", "block_number", "log_index"]
+    return out.withColumn("_topic0", topic0).dropDuplicates(key).drop("_topic0")
 
 
 @dataclass
 class BlockRangePartition(InputPartition):
     """One fetch chunk: blocks [lo, hi) — the reference's eth_getLogs call.
 
-    Carries the effective address filter so ``read`` never consults reader
-    state that query-scoped filter pushdown may have touched.
-    ``address_exact`` marks a pushdown-sourced address, matched VERBATIM
-    (Spark re-evaluates the predicate post-scan with its own case
-    semantics); an option-sourced address is normalized to lowercase (the
-    source's documented contract, matching how the chain stores them)."""
+    ``address``, when set, stands in for every pair's address in this
+    chunk's read: a one-pair read's option address, or the pushdown-sourced
+    one. It rides on the partition so ``read`` never consults reader state
+    that query-scoped filter pushdown may have touched. ``address_exact``
+    marks a pushdown-sourced address, matched VERBATIM (Spark re-evaluates
+    the predicate post-scan with its own case semantics); an option-sourced
+    address is normalized to lowercase (the source's documented contract,
+    matching how the chain stores them)."""
 
     lo: int
     hi: int
@@ -247,18 +301,21 @@ def _chunks(
 
 
 def _chain_head(path: str) -> int:
-    """max(block_number) from parquet row-group statistics (no data scan)."""
+    """max(block_number) from the row-group statistics of every file of
+    the table (no data scan); ``path`` is one parquet file or a directory
+    of them."""
     import pyarrow.compute as pc
-    import pyarrow.parquet as pq
+    import pyarrow.dataset as ds
 
-    md = pq.ParquetFile(path).metadata
-    names = [md.schema.column(i).name for i in range(md.num_columns)]
-    idx = names.index("block_number")
-    stats = [md.row_group(rg).column(idx).statistics for rg in range(md.num_row_groups)]
-    maxima = [s.max for s in stats if s is not None and s.has_min_max]
-    if not maxima:  # stats missing: fall back to a scan of the one column
-        return int(pc.max(pq.read_table(path, columns=["block_number"])[0]).as_py())
-    return int(max(maxima))
+    dataset = ds.dataset(path, format="parquet")
+    stats = [
+        rg.statistics.get("block_number")
+        for frag in dataset.get_fragments()
+        for rg in frag.row_groups
+    ]
+    if not stats or None in stats:  # stats missing: scan the one column
+        return int(pc.max(dataset.to_table(columns=["block_number"])[0]).as_py())
+    return int(max(st["max"] for st in stats))
 
 
 def _stored_schema(path: str) -> StructType:
@@ -318,77 +375,111 @@ def _with_retry(call, transient: type[Exception], attempts: int, base_s: float):
             time.sleep(base_s * (2 ** (attempt - 1)))
 
 
-def _fetch_chunk(o: _Options, lo: int, hi: int, address: str | None) -> pa.Table:
-    """Logs in [lo, hi) from the configured transport, with source-side
-    filtering: a parquet scan pushes the block range and ``address`` to
-    row groups; ``eth_getLogs`` (one call per chunk, the reference's S1
-    call, stream.rs:159-183) sends address and topic0 to the node, which
-    evaluates them server-side (stream.rs:94-102). Columns come back in
-    whatever physical types the store holds."""
+def _fetch_chunk(o: _Options, lo: int, hi: int, pairs: tuple) -> pa.Table:
+    """Logs in [lo, hi) for every pair from the configured transport, with
+    source-side filtering: one parquet scan pushes the block range and the
+    pairs' addresses (an ``in`` filter) to row groups; JSON-RPC sends one
+    ``eth_getLogs`` per pair (the reference's S1 call, stream.rs:159-183),
+    whose address and topic0 the node evaluates (stream.rs:94-102), each
+    call retried on its own. Columns come back in whatever physical types
+    the store holds."""
     import pyarrow as pa
 
     if o.rpc_url is not None:
         fetcher = JsonRpcLogFetcher(o.rpc_url)
-        rows = _with_retry(
-            lambda: fetcher.get_logs(lo, hi - 1, address=address, topic0=o.topic0),
-            TransientRpcError,
-            o.retry_attempts,
-            o.retry_base_s,
-        )
+        rows = [
+            row
+            for address, topic0 in pairs
+            for row in _with_retry(
+                lambda: fetcher.get_logs(lo, hi - 1, address=address, topic0=topic0),
+                TransientRpcError,
+                o.retry_attempts,
+                o.retry_base_s,
+            )
+        ]
         cols = list(zip(*rows)) or [()] * len(_COLS)
         schema = _arrow_schema()
         return pa.Table.from_arrays(
             [pa.array(c, f.type) for c, f in zip(cols, schema)], schema=schema
         )
     flt = [("block_number", ">=", lo), ("block_number", "<", hi)]
-    if address is not None:
-        flt.append(("address", "=", address))
+    if all(a is not None for a, _ in pairs):
+        flt.append(("address", "in", sorted({a for a, _ in pairs})))
     return _with_retry(
         lambda: _fetch_table(o.path, flt), OSError, o.retry_attempts, o.retry_base_s
     )
 
 
-def _post_filter(
-    tbl: pa.Table,
-    topic0: str | None,
-    fail_on_removed: bool,
-    address: str | None = None,
-    address_exact: bool = False,
-) -> pa.Table:
-    """Client-side re-check shared by both transports, vectorised: the
-    address contract (verbatim for pushdown-sourced; caseless on BOTH sides
-    for option-sourced, like the chain's 20-byte compare, so a node
-    returning EIP-55 checksummed addresses still matches), the caseless
-    topic0 match (rows with null or empty ``topics`` cannot match), and the
-    S7 reorg policy on ``removed`` (null counts as not removed)."""
+def _first_topic(topics) -> pa.ChunkedArray:
+    """``topics[0]``, null where ``topics`` is null or empty."""
     import pyarrow.compute as pc
 
-    if address is not None:
-        if address_exact:
-            tbl = tbl.filter(pc.equal(tbl["address"], address))
-        else:
-            tbl = tbl.filter(pc.equal(pc.utf8_lower(tbl["address"]), address.lower()))
-    if topic0 is not None:
-        tbl = tbl.filter(pc.greater(pc.list_value_length(tbl["topics"]), 0))
-        first = pc.list_element(tbl["topics"], 0)
-        tbl = tbl.filter(pc.equal(pc.utf8_lower(first), topic0.lower()))
+    return pc.list_element(pc.list_slice(topics, 0, 1, return_fixed_size_list=True), 0)
+
+
+def _post_filter(
+    tbl: pa.Table,
+    pairs: tuple,
+    fail_on_removed: bool,
+    address_exact: bool = False,
+    upsert: bool = False,
+) -> pa.Table:
+    """Client-side re-check shared by both transports, vectorised: a row
+    must match one pair. A pair's address is compared verbatim when
+    pushdown-sourced (``address_exact``) and caselessly on BOTH sides
+    otherwise, like the chain's 20-byte compare, so a node returning EIP-55
+    checksummed addresses still matches; its topic0 is compared caselessly
+    with the first topic, so rows with null or empty ``topics`` cannot
+    match. Then the S7 reorg policy on ``removed`` (null counts as not
+    removed), then for an ``upsert`` one row per ``(lower(address),
+    lower(topics[0]), block_number, log_index)``, the first fetched."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    address = tbl["address"] if address_exact else pc.utf8_lower(tbl["address"])
+    topic0 = pc.utf8_lower(_first_topic(tbl["topics"]))
+    keep = pa.scalar(False)
+    for a, t in pairs:
+        m = pa.scalar(True)
+        if a is not None:
+            m = pc.and_kleene(m, pc.equal(address, a if address_exact else a.lower()))
+        if t is not None:
+            m = pc.and_kleene(m, pc.equal(topic0, t.lower()))
+        keep = pc.or_kleene(keep, m)
+    if not isinstance(keep, pa.Scalar):  # a (None, None) pair keeps every row
+        tbl = tbl.filter(keep)
     removed = pc.fill_null(tbl["removed"], False)
     if fail_on_removed and pc.any(removed).as_py():
         block = tbl["block_number"].filter(removed)[0].as_py()
         raise ReorgError(f"removed log at block {block} — increase confirmation_blocks")
-    return tbl.filter(pc.invert(removed))
+    tbl = tbl.filter(pc.invert(removed))
+    if not upsert:
+        return tbl
+    keys = pa.table(
+        {
+            "address": pc.utf8_lower(tbl["address"]),
+            "topic0": pc.utf8_lower(_first_topic(tbl["topics"])),
+            "block_number": tbl["block_number"],
+            "log_index": tbl["log_index"],
+            "row": pa.array(range(tbl.num_rows), pa.int64()),
+        }
+    )
+    first = keys.group_by(keys.column_names[:4], use_threads=False).aggregate([("row", "min")])
+    return tbl.take(first["row_min"])
 
 
 def _read_range(
     o: _Options, lo: int, hi: int, address: str | None = None, address_exact: bool = False
 ) -> pa.Table:
-    """One chunk, fetched, cast to ``ETH_LOG_SCHEMA`` and post-filtered.
-    An option-sourced address is lowercased for the transport (source
-    contract); a pushdown-sourced one (``address_exact``) is sent verbatim
-    so the pushed predicate is semantically identical to the declined one."""
-    send = None if address is None else (address if address_exact else address.lower())
+    """One chunk, fetched, cast to ``ETH_LOG_SCHEMA`` and post-filtered. A
+    partition's ``address`` replaces every pair's address. Option-sourced
+    addresses are lowercased for the transport (source contract); a
+    pushdown-sourced one (``address_exact``) is sent verbatim so the pushed
+    predicate is semantically identical to the declined one."""
+    pairs = o.pairs if address is None else tuple((address, t) for _, t in o.pairs)
+    send = tuple((a if a is None or address_exact else a.lower(), t) for a, t in pairs)
     tbl = _fetch_chunk(o, lo, hi, send).select(_COLS).cast(_arrow_schema())
-    return _post_filter(tbl, o.topic0, o.fail_on_removed, address, address_exact)
+    return _post_filter(tbl, pairs, o.fail_on_removed, address_exact, o.upsert)
 
 
 class _EthLogReader:
@@ -463,7 +554,8 @@ class EthLogBatchReader(_EthLogReader, DataSourceReader):
         caching is JVM-side). Default off = always safe."""
         if not self.opts.pushdown:
             return filters  # decline everything; Spark evaluates post-scan
-        lo, hi, addr = self.opts.from_block, self.opts.to_block, self.opts.address
+        o = self.opts
+        lo, hi, addr = o.from_block, o.to_block, o.address
         addr_pushed = False
         remaining: list[Filter] = []
         for f in filters:
@@ -483,12 +575,13 @@ class EthLogBatchReader(_EthLogReader, DataSourceReader):
                 else:  # EqualTo
                     lo = max(lo, v)
                     hi = v if hi is None else min(hi, v)
-            elif col == "address" and isinstance(f, EqualTo) and addr is None:
+            elif col == "address" and isinstance(f, EqualTo) and addr is None and not o.upsert:
                 # narrow the scan with the VERBATIM value but keep the filter
                 # in `remaining`: Spark re-evaluates it post-scan, so pushed
                 # semantics are identical to declined semantics (an
                 # option-style .lower() here would silently match rows the
-                # vanilla predicate rejects, and vice versa)
+                # vanilla predicate rejects, and vice versa). A `streams`
+                # read keeps its pairs' own addresses.
                 addr = str(f.value)
                 addr_pushed = True
                 remaining.append(f)
@@ -515,8 +608,11 @@ class EthLogDataSource(DataSource):
 
     Options: path OR rpc_url (parquet stand-in vs live JSON-RPC node —
     identical chunking/pushdown/retry/reorg semantics on both transports),
-    from_block, to_block, confirmation_blocks=2, block_step=1000, address,
-    topic0, fail_on_removed=true, pushdown=false, retry_attempts=4,
+    from_block, to_block, confirmation_blocks=2, block_step=1000, the log
+    filter — streams (a JSON list of ``[address, topic0]`` pairs: one read
+    for all of them, each ``(address, topic0, block_number, log_index)``
+    once) OR address and topic0 (one pair, raw rows) —
+    fail_on_removed=true, pushdown=false, retry_attempts=4,
     retry_base_ms=10.
     """
 

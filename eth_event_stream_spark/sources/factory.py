@@ -5,28 +5,37 @@ examples/stream_multi.rs:90-106): a factory holds shared range/confirmation/
 chunk config; each ``make(address, event)`` registers one (address, topic0)
 stream into a shared sink; consumers read block-aligned merged batches.
 
-Spark shape: each ``make`` contributes one source DataFrame per stream;
-``sink()`` is their ``unionByName`` tagged with the stream signature — the
-S8 fan-in — already deduped (B4) and ready for block-aligned consumption.
+Spark shape: ``sink()`` is ONE ``eth_logs`` read of every registered
+``(address, topic0)`` pair (the ``streams`` option) tagged with each row's
+stream signature by ``operators.sync.tag_signature`` — the S8 fan-in. The
+read itself is the Sink's idempotent upsert (B4): each ``(sig, block,
+log_index)`` comes back once. As a stream it is one source with one offset,
+so each trigger makes one head call and each micro-batch covers one block
+range ``[start, end)`` for every stream: the reference's
+min-of-per-source-maxima watermark (B2, sink.rs:187-197) holds by
+construction, and no streaming dedup state is kept.
+
 The same options serve ``spark.read`` (historical drain) and
 ``spark.readStream`` (live tail), the unified API the reference sells
 (README.md:15), but they compile to two plans. A batch read of a parquet
-``path`` is ``block_source.read_parquet_logs``: Spark's native parquet
-scan plus Catalyst predicates, with no Python planner or worker. Its
-differences from the ``eth_logs`` source it reproduces: ``block_step``
-and the retry options do nothing, and a reorg fails through Spark's
-``raise_error`` with the source's message. A stream, or any read over
-``rpc_url``, goes through the Python ``eth_logs`` source.
+``path`` is ``block_source.read_parquet_logs``: one native parquet scan
+with the pairs' addresses pushed in as an ``IN``, Catalyst predicates and
+one ``dropDuplicates``, with no Python planner or worker. Its differences
+from the ``eth_logs`` source it reproduces: ``block_step`` and the retry
+options do nothing, and a reorg fails through Spark's ``raise_error`` with
+the source's message. A stream, or any read over ``rpc_url``, goes through
+the Python ``eth_logs`` source.
 """
 
 from __future__ import annotations
 
+import json
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..functions.schema import EventSchema, parse_event_declaration
+from ..operators.sync import tag_signature
 from .block_source import read_parquet_logs
 from .block_source import register as _register_source
 
@@ -72,13 +81,18 @@ class StreamFactory:
         self.streams.append(handle)
         return handle
 
-    def _one(self, h: StreamHandle, streaming: bool, fail_on_removed: bool) -> DataFrame:
+    def sink(self, streaming: bool = False, fail_on_removed: bool = True) -> DataFrame:
+        """The shared sink's input: one read of every registered stream,
+        each (sig, block, log_index) once — the B4 idempotent upsert — and
+        tagged with ``sig``. Downstream consumers apply the operators.sync
+        surface (dense flush, total order) or decode_event per signature."""
+        if not self.streams:
+            raise ValueError("no streams registered — call make() first")
         opts = {
             "from_block": self.from_block,
             "confirmation_blocks": self.confirmation_blocks,
             "block_step": self.block_step,
-            "address": h.address,
-            "topic0": h.event.topic0,
+            "streams": json.dumps([[h.address, h.event.topic0] for h in self.streams]),
             "fail_on_removed": str(fail_on_removed).lower(),
         }
         if self.rpc_url is not None:
@@ -92,17 +106,4 @@ class StreamFactory:
         else:
             reader = self.spark.readStream if streaming else self.spark.read
             df = reader.format("eth_logs").options(**opts).load()
-        return df.withColumn("sig", F.lit(h.signature))
-
-    def sink(self, streaming: bool = False, fail_on_removed: bool = True) -> DataFrame:
-        """The shared sink's input: union of all registered streams, deduped
-        on (sig, block, log_index) — B4 idempotent upsert. Downstream
-        consumers apply the operators.sync surface (dense flush, total order)
-        or decode_event per signature."""
-        if not self.streams:
-            raise ValueError("no streams registered — call make() first")
-        dfs = [self._one(h, streaming, fail_on_removed) for h in self.streams]
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d)
-        return out.dropDuplicates(["sig", "block_number", "log_index"])
+        return tag_signature(df)

@@ -86,11 +86,12 @@ class JsonRpcLogFetcher:
         address: str | None = None,
         topic0: str | None = None,
     ) -> list[tuple]:
-        """``eth_getLogs`` over the INCLUSIVE [from_block, to_block] range,
-        returning rows in ETH_LOG_SCHEMA column order. The address/topic0
-        filter is evaluated node-side (the reference's server-side split,
-        SURVEY §4); callers re-check client-side so the source's exact-match
-        contract holds regardless of node case behavior."""
+        """``eth_getLogs`` over the INCLUSIVE [from_block, to_block] range
+        for one (address, topic0) pair, returning rows in ETH_LOG_SCHEMA
+        column order. The ``eth_logs`` source makes one call per pair per
+        chunk. The filter is evaluated node-side (the reference's
+        server-side split, SURVEY §4); callers re-check client-side so the
+        source's match contract holds regardless of node case behavior."""
         flt: dict = {"fromBlock": hex(from_block), "toBlock": hex(to_block)}
         if address is not None:
             flt["address"] = address

@@ -18,6 +18,7 @@ Same code path; only the transport option changes.
 
 from __future__ import annotations
 
+import ast
 import os
 import sys
 import tempfile
@@ -124,6 +125,17 @@ def run_live(spark, factory) -> None:
     )
     q.processAllAvailable()  # bounded range -> drains and returns (B5)
     q.stop()
+    # one source serves both streams, so each trigger reads one block range
+    # [start, end) for all of them: the reference's N-way watermark (B2)
+    for p in q.recentProgress:
+        [src] = p["sources"]
+        # offsets are {"block": next_unread_block}; the first batch has no start
+        start, end = (
+            (ast.literal_eval(src[k]) or {"block": factory.from_block})["block"]
+            for k in ("startOffset", "endOffset")
+        )
+        if end > start:
+            print(f"[trigger {p['batchId']}] blocks [{start}, {end}) for both streams")
     # note: the live tail holds back `confirmation_blocks` behind the head
     # (S3) — a few tip transfers stay unconfirmed until more blocks land
     print("live drain complete")

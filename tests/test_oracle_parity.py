@@ -173,3 +173,40 @@ def test_all_queries_have_unique_columns(spark, sf_dir):
     for name, q in QUERIES.items():
         cols = q.fn(spark, sf_dir).columns
         assert len(cols) == len(set(cols)), f"{name}: duplicate columns {cols}"
+
+
+@pytest.mark.parametrize("name", ["reducer_netflow_batch", "reducer_netflow_arrow"])
+def test_reducer_netflow_matches_oracle_on_half_cents(spark, tmp_path, name):
+    """Values whose cents are exact binary halves (0.125 -> 12.5, 0.625 ->
+    62.5) round half to even in both netflow reducers and in their oracle,
+    for purchases (negated) and other events alike."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rows = [  # user_id, event_type, value
+        (1, "view", 0.125), (1, "purchase", 0.625), (1, "click", 0.375),
+        (2, "purchase", 0.125), (2, "view", 2.5), (3, "cart", 0.625),
+    ]
+    t0 = datetime.datetime(2024, 1, 1)
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array(range(len(rows)), pa.int64()),
+                "ts": pa.array([t0 + datetime.timedelta(seconds=i) for i in range(len(rows))],
+                               pa.timestamp("us")),
+                "user_id": pa.array([r[0] for r in rows], pa.int64()),
+                "event_type": [r[1] for r in rows],
+                "value": pa.array([r[2] for r in rows], pa.float64()),
+                "props": ["{}"] * len(rows),
+            }
+        ),
+        str(tmp_path / "events.parquet"),
+    )
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{tmp_path}/events.parquet')")
+    want = sorted(con.execute(QUERIES[name].oracle).fetchall())
+    got = sorted(tuple(r) for r in QUERIES[name].fn(spark, str(tmp_path)).collect())
+    # 12 - 62 + 38 | -12 + 250 | 62
+    assert got == want == [(1, -12, 3), (2, 238, 2), (3, 62, 1)]

@@ -6,6 +6,7 @@ network-free equivalent of the reference's live integration test
 
 from __future__ import annotations
 
+import ast
 import json
 import threading
 from http.server import BaseHTTPRequestHandler, HTTPServer
@@ -44,9 +45,11 @@ class _FakeNode:
     """In-process Ethereum node: eth_blockNumber + eth_getLogs over fixture
     rows, with injectable transient failures and a call log."""
 
-    def __init__(self, rows: list[dict], head: int):
+    def __init__(self, rows: list[dict], head: int, head_step: int = 0):
         self.logs = [_json_log(r) for r in rows]
         self.head = head
+        self.head_step = head_step  # the head moves this far after each eth_blockNumber
+        self.heads: list[int] = []  # every head eth_blockNumber returned
         self.calls: list[str] = []
         self.fail_next = 0  # serve this many HTTP 500s before recovering
         node = self
@@ -79,7 +82,10 @@ class _FakeNode:
     def handle(self, body: dict) -> dict:
         method, params = body["method"], body.get("params", [])
         if method == "eth_blockNumber":
-            return {"jsonrpc": "2.0", "id": body["id"], "result": hex(self.head)}
+            head = self.head
+            self.heads.append(head)
+            self.head += self.head_step
+            return {"jsonrpc": "2.0", "id": body["id"], "result": hex(head)}
         if method == "eth_getLogs":
             f = params[0]
             lo, hi = int(f["fromBlock"], 16), int(f["toBlock"], 16)
@@ -180,14 +186,14 @@ def test_post_filter_accepts_checksummed_node_addresses():
     row = (checksummed, [TRANSFER_TOPIC0], b"\x00" * 32, 5, 0, "0xabc", False)
     tbl = pa.Table.from_pylist([dict(zip(bs._COLS, row))], schema=bs._arrow_schema())
     out = bs._post_filter(
-        tbl, TRANSFER_TOPIC0, fail_on_removed=True,
-        address=checksummed.lower(), address_exact=False,
+        tbl, ((checksummed.lower(), TRANSFER_TOPIC0),), fail_on_removed=True,
+        address_exact=False,
     )
     assert [tuple(r.values()) for r in out.to_pylist()] == [row]
     # pushdown-sourced stays verbatim: a case mismatch is NOT matched
     out_exact = bs._post_filter(
-        tbl, TRANSFER_TOPIC0, fail_on_removed=True,
-        address=checksummed.lower(), address_exact=True,
+        tbl, ((checksummed.lower(), TRANSFER_TOPIC0),), fail_on_removed=True,
+        address_exact=True,
     )
     assert out_exact.num_rows == 0
 
@@ -271,6 +277,104 @@ def test_factory_fan_in_over_rpc(spark, node):
     assert per_sig[a.signature] == fx.golden_count_a
     assert len(per_sig) == 2 and all(v > 0 for v in per_sig.values())
     assert merged.count() == fx.total_events
+
+
+def test_factory_fan_in_pairs_sharing_an_address(spark):
+    """Two pairs on one address (Transfer and Approval of contract A) plus
+    a second contract: one eth_getLogs per pair per chunk, and each stream's
+    rows come back once under its own signature."""
+    from eth_event_stream_spark.functions.schema import parse_event_declaration
+    from eth_event_stream_spark.sources.factory import StreamFactory
+    from eth_event_stream_spark.sources.fixtures import ADDR_B, TRANSFER_DECL
+
+    fx = generate_eth_logs()
+    approval = "Approval(address indexed owner, address indexed spender, uint value)"
+    approval_topic0 = parse_event_declaration(approval).topic0
+    live_a = [r for r in fx.rows if r["address"] == ADDR_A and not r["removed"]]
+    approvals = [
+        dict(r, topics=[approval_topic0, *r["topics"][1:]], log_index=r["log_index"] + 1000)
+        for r in live_a[::5]
+    ]
+    n = _FakeNode(fx.rows + approvals + approvals[:1], head=fx.to_block)  # one fetched twice
+    try:
+        factory = StreamFactory(
+            spark, rpc_url=n.url, from_block=fx.from_block, to_block=fx.to_block,
+            confirmation_blocks=0, block_step=40,
+        )
+        a = factory.make(ADDR_A, TRANSFER_DECL)
+        ap = factory.make(ADDR_A.upper().replace("0X", "0x"), approval)
+        b = factory.make(ADDR_B, TRANSFER_DECL)
+        merged = factory.sink(fail_on_removed=False)
+        per_sig = {
+            r["sig"]: r["n"]
+            for r in merged.groupBy("sig").count().withColumnRenamed("count", "n").collect()
+        }
+    finally:
+        n.stop()
+    assert per_sig == {
+        a.signature: fx.golden_count_a,
+        ap.signature: len({(r["block_number"], r["log_index"]) for r in approvals}),
+        b.signature: fx.total_events - fx.golden_count_a,
+    }
+    chunks = len(bs._chunks(fx.from_block, fx.to_block + 1, 40))
+    assert n.calls.count("eth_getLogs") == 3 * chunks
+
+
+def test_factory_tail_one_offset_for_every_stream(spark, tmp_path):
+    """A two-stream factory tail against a node whose head moves on every
+    eth_blockNumber call: each micro-batch has one source, so one head
+    call per trigger ends every stream at the same block, and no block's
+    logs are split across two micro-batches."""
+    from eth_event_stream_spark.sources.factory import StreamFactory
+    from eth_event_stream_spark.sources.fixtures import ADDR_B, TRANSFER_DECL
+
+    fx = generate_eth_logs()
+    n = _FakeNode(fx.rows, head=fx.from_block + 3, head_step=20)
+    seen: dict[int, list[tuple]] = {}
+    try:
+        factory = StreamFactory(
+            spark, rpc_url=n.url, from_block=fx.from_block, to_block=fx.to_block,
+            confirmation_blocks=0,
+        )
+        factory.make(ADDR_A, TRANSFER_DECL)
+        factory.make(ADDR_B, TRANSFER_DECL)
+        q = (
+            factory.sink(streaming=True, fail_on_removed=False)
+            .writeStream.foreachBatch(
+                lambda df, epoch: seen.setdefault(
+                    epoch, [(r["sig"], r["block_number"]) for r in df.select("sig", "block_number").collect()]
+                )
+            )
+            .option("checkpointLocation", str(tmp_path / "ck"))
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+            progress = [p for p in q.recentProgress if p["batchId"] in seen]
+        finally:
+            q.stop()
+    finally:
+        n.stop()
+    assert all(len(p["sources"]) == 1 for p in progress)
+
+    def offset_block(offset: str) -> int:  # the first batch starts at no offset
+        return (ast.literal_eval(offset) or {"block": fx.from_block})["block"]
+
+    ranges = [
+        (offset_block(p["sources"][0]["startOffset"]), offset_block(p["sources"][0]["endOffset"]))
+        for p in progress
+    ]
+    # the i-th trigger ends where the i-th head call put it
+    assert [hi for _, hi in ranges] == [min(h + 1, fx.to_block + 1) for h in n.heads[: len(ranges)]]
+    assert len(ranges) >= 5 and ranges[-1][1] == fx.to_block + 1
+    assert all(a[1] == b[0] for a, b in zip(ranges, ranges[1:]))
+    batch_of: dict[int, set] = {}
+    for (lo, hi), p in zip(ranges, progress):
+        for _, block in seen[p["batchId"]]:
+            assert lo <= block < hi
+            batch_of.setdefault(block, set()).add(p["batchId"])
+    assert batch_of and all(len(ids) == 1 for ids in batch_of.values())
+    assert sum(len(rows) for rows in seen.values()) == fx.total_events
 
 
 def test_stream_live_tail_follows_rpc_head(spark, node, tmp_path):

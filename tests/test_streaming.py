@@ -5,6 +5,7 @@ golden-count test is the model)."""
 
 from __future__ import annotations
 
+import re
 import time
 
 import pyarrow.compute as pc
@@ -1404,6 +1405,100 @@ def test_read_parquet_logs_reorg_matches_python_reader(source_registered, parity
         read_parquet_logs(spark, opts).collect()
 
 
+_STREAMS = {  # `streams` reads of the parity table: (pairs, block of the removed log they match)
+    "two_addresses": ([[_A, _T0], [_B, _T0]], 5),
+    "one_address_two_topic0s": ([[_A, _T0], [_A, _TX]], 4),
+    "same_pair_twice_in_case": ([[_A, _T0], [_A.upper().replace("0X", "0x"), _T0.upper()]], None),
+}
+
+
+def _upsert_keys(rows) -> list[tuple]:
+    """The upsert key of each row: (lower(address), lower(topics[0]), block, log_index)."""
+    return sorted(
+        (r["address"].lower(), r["topics"][0].lower(), r["block_number"], r["log_index"])
+        for r in rows
+    )
+
+
+@pytest.mark.parametrize("fail_on_removed", ["true", "false"])
+@pytest.mark.parametrize("name", sorted(_STREAMS))
+@pytest.mark.parametrize("store", [0, 1], ids=["canonical", "int32_large_string"])
+def test_read_parquet_logs_streams_match_python_reader(
+    source_registered, parity_stores, name, store, fail_on_removed
+):
+    """A ``streams`` read through the native scan returns the Python
+    reader's upsert keys, each once, or fails with its reorg message. The
+    parity table's duplicate (1, 0) rows differ, so which copy survives is
+    not compared."""
+    import json
+
+    from eth_event_stream_spark.sources.block_source import ETH_LOG_SCHEMA, read_parquet_logs
+
+    spark = source_registered
+    pairs, reorg_block = _STREAMS[name]
+    opts = {"path": parity_stores[store], "streams": json.dumps(pairs),
+            "fail_on_removed": fail_on_removed}
+    want = spark.read.format("eth_logs").options(**opts).load()
+    got = read_parquet_logs(spark, opts)
+    assert got.schema == want.schema == ETH_LOG_SCHEMA
+    if fail_on_removed == "true" and reorg_block is not None:
+        msg = f"removed log at block {reorg_block} — increase confirmation_blocks"
+        for df in (want, got):
+            with pytest.raises(Exception, match=msg):
+                df.collect()
+        return
+    keys = _upsert_keys(got.collect())
+    assert keys and keys == _upsert_keys(want.collect())
+    assert len(set(keys)) == len(keys)
+
+
+@pytest.mark.parametrize("fail_on_removed", ["true", "false"])
+def test_read_parquet_logs_streams_drop_exact_copies(source_registered, eth_logs_fixture, fail_on_removed):
+    """Over the fixture's exact-copy duplicates both readers return the
+    same rows, one per (sig, block, log_index): the fixture's distinct
+    non-removed logs. With removed rows failing the read, both fail."""
+    import json
+
+    from eth_event_stream_spark.sources.block_source import read_parquet_logs
+    from eth_event_stream_spark.sources.fixtures import ADDR_B
+
+    spark = source_registered
+    fx, path = eth_logs_fixture
+    opts = {"path": path, "streams": json.dumps([[ADDR_A, TRANSFER_TOPIC0], [ADDR_B, TRANSFER_TOPIC0]]),
+            "from_block": fx.from_block, "to_block": fx.to_block, "block_step": "20",
+            "fail_on_removed": fail_on_removed}
+    want = spark.read.format("eth_logs").options(**opts).load()
+    got = read_parquet_logs(spark, opts)
+    if fail_on_removed == "true":
+        for df in (want, got):
+            with pytest.raises(Exception, match="removed log at block"):
+                df.collect()
+        return
+    rows = sorted(got.collect(), key=repr)
+    assert rows == sorted(want.collect(), key=repr)
+    assert len(rows) == len(set(_upsert_keys(rows))) == fx.total_events
+
+
+def test_read_parquet_logs_directory_table_to_head(source_registered, tmp_path):
+    """A table stored as a directory of parquet files reads to its head
+    (the max block over every file) through both readers."""
+    import pyarrow.parquet as pq
+
+    from eth_event_stream_spark.sources.block_source import read_parquet_logs
+
+    spark = source_registered
+    tbl = _parity_table()
+    table_dir = tmp_path / "logs"
+    table_dir.mkdir()
+    pq.write_table(tbl.slice(0, 6), str(table_dir / "part-0.parquet"))  # blocks 1-3
+    pq.write_table(tbl.slice(6), str(table_dir / "part-1.parquet"))  # blocks 4-6
+    opts = {"path": str(table_dir), "fail_on_removed": "false"}
+    want = sorted(spark.read.format("eth_logs").options(**opts).load().collect(), key=repr)
+    got = sorted(read_parquet_logs(spark, opts).collect(), key=repr)
+    assert got == want
+    assert max(r["block_number"] for r in got) == 6
+
+
 def test_factory_batch_sink_reorg_fails(spark, eth_logs_fixture):
     """S7 through the factory: with default options a batch sink over a
     table holding removed logs fails the drain."""
@@ -1438,6 +1533,67 @@ def test_factory_batch_sink_plan_has_no_python(spark, eth_logs_fixture):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "FileScan parquet" in plan
     assert not re.search(PYTHON_PLAN_NODE, plan), plan
+
+
+def test_factory_batch_sink_scans_once(spark, eth_logs_fixture):
+    """A two-stream batch sink over a parquet path is one read of both
+    pairs: its executed plan holds one parquet scan and no Python node."""
+    from eth_event_stream_spark.sources.factory import StreamFactory
+    from eth_event_stream_spark.sources.fixtures import ADDR_B, TRANSFER_DECL
+
+    fx, path = eth_logs_fixture
+    factory = StreamFactory(spark, path=path, from_block=fx.from_block, to_block=fx.to_block)
+    factory.make(ADDR_A, TRANSFER_DECL)
+    factory.make(ADDR_B, TRANSFER_DECL)
+    df = factory.sink(fail_on_removed=False)
+    assert df.count() == fx.total_events
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("FileScan parquet") == 1, plan
+    assert not re.search(PYTHON_PLAN_NODE, plan), plan
+
+
+def test_factory_stream_keeps_only_reducer_state(spark, eth_logs_fixture, tmp_path):
+    """A tail of a two-stream factory sink into the lowered netflow keeps
+    one state store, the reducer's aggregate, holding one row per key: the
+    upsert happens inside the source read, with no deduplication state."""
+    from eth_event_stream_spark.functions.decode import decode_event
+    from eth_event_stream_spark.sources.factory import StreamFactory
+    from eth_event_stream_spark.sources.fixtures import ADDR_B, TRANSFER_DECL
+
+    fx, path = eth_logs_fixture
+    factory = StreamFactory(
+        spark, path=path, from_block=fx.from_block, to_block=fx.to_block,
+        confirmation_blocks=0, block_step=40,
+    )
+    factory.make(ADDR_A, TRANSFER_DECL)
+    factory.make(ADDR_B, TRANSFER_DECL)
+    flows = decode_event(factory.sink(streaming=True, fail_on_removed=False), TRANSFER_DECL).select(
+        F.crc32("from").alias("key"),
+        ((F.col("value") % 1_000_000).cast("double") / 100).alias("value"),
+        F.lit(1).alias("sign"),
+        "block_number",
+        "log_index",
+    )
+    q = (
+        reduce_events_stream(flows, CentsNetflowReducer(), ["key"])
+        .writeStream.format("memory")
+        .queryName("factory_reducer_state")
+        .outputMode("update")
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        ops = q.lastProgress["stateOperators"]
+    finally:
+        q.stop()
+    keys = spark.table("factory_reducer_state").select("key").distinct().count()
+    assert [op["operatorName"] for op in ops] == ["stateStoreSave"]
+    assert ops[0]["numRowsTotal"] == keys > 0
+    n = spark.table("factory_reducer_state").groupBy("key").agg(F.max("n_events").alias("n"))
+    assert n.agg(F.sum("n")).collect()[0][0] == fx.total_events
 
 
 def test_register_once_per_session(spark, tmp_path, monkeypatch):
