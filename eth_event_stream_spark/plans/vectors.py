@@ -365,6 +365,180 @@ def cell_assignments(e: DataFrame, cent_arr: DataFrame) -> DataFrame:
     )
 
 
+# ---------------------------------------------------------------------------
+# The Lloyd kernel. IVF (one subspace as wide as the vector) and PQ (PQ_M
+# subspaces) run one algorithm over a codebook {m: (ids, C)}: ids ascending,
+# C the K_m x w float64 matrix of subspace m (columns m*w .. m*w + w - 1 of
+# the vector). The codebook rides the driver between rounds (bounded
+# metadata, the k-center pattern); each round is ONE mapInArrow pass that
+# assigns in NumPy and emits per-batch partial sums, so no N*K distance
+# relation and no N*D posexplode ever reach Spark. The two callers differ
+# only in the argmin key.
+# ---------------------------------------------------------------------------
+
+
+def _half_up_micro(V):
+    """int64 of Spark's ``ROUND(x, 0)`` (Java HALF_UP on the shortest
+    decimal repr) applied to an ndarray. A double's shortest repr is
+    exactly ``n.5`` only when the double equals n.5, so exact halves are
+    the only values where HALF_UP differs from ``np.rint``
+    (half-to-even): those round away from zero, everything else is
+    ``np.rint``. The half test runs on ``|V|`` — for
+    ``V = -0.49999999999999994``, ``V - floor(V)`` rounds to exactly 0.5.
+    The one copy of this rounding: the Lloyd kernel's member sums and
+    PQ's argmin key both call it, pinned by the near-half adversary gates.
+
+    NaN and ±Inf have no int64 value (the cast would turn NaN into
+    INT64_MIN, which then wins every argmin), so they raise ``ValueError``
+    instead."""
+    import numpy as np
+
+    if not np.isfinite(V).all():
+        raise ValueError(
+            "_half_up_micro: NaN or infinite input has no int64 micro-unit value"
+        )
+    A = np.abs(V)
+    half = A - np.floor(A) == 0.5
+    return np.where(half, np.copysign(np.floor(A) + 1, V), np.rint(V)).astype(np.int64)
+
+
+def _batch_matrix(b):
+    """An Arrow batch's ``e`` column (array<double>) as an n x D float64
+    matrix."""
+    import numpy as np
+
+    return np.stack(b.column("e").to_numpy(zero_copy_only=False))
+
+
+def _nearest(E, m, ids, C, key):
+    """For every row of ``E``, the index into ``ids`` of the nearest row
+    of ``C`` in subspace ``m``. Distances accumulate DIM-SEQUENTIALLY,
+    ``acc += (x_d - c_d)^2`` in dim order — the IEEE op sequence of the
+    oracle's ``list_sum`` and of Spark's ``aggregate(zip_with(...))`` left
+    fold — and ``key(dist, ids)`` is what the argmin minimizes; a tie goes
+    to the first index, the smallest id."""
+    import numpy as np
+
+    w = C.shape[1]
+    S = E[:, m * w : (m + 1) * w]
+    acc = np.zeros((E.shape[0], C.shape[0]), dtype=np.float64)
+    for d in range(w):
+        diff = S[:, d, None] - C[None, :, d]
+        acc += diff * diff
+    return np.argmin(key(acc, ids), axis=1)
+
+
+def _ivf_key(dist, ids):
+    """IVF's argmin key: the raw distance, ties to the smallest cid — the
+    oracle's ``ORDER BY dist, cid``."""
+    return dist
+
+
+def _pq_key(dist, ids):
+    """PQ's argmin key, the BIGINT whose ``MIN`` the oracle takes:
+    ``HALF_UP(dist * 1e6) * 16 + j``."""
+    return _half_up_micro(dist * 1e6) * 16 + ids[None, :]
+
+
+def _codebook(rows) -> dict:
+    """{m: (ids, C)} from ``(m, j, ce)`` rows, ids ascending per subspace."""
+    import numpy as np
+
+    by_m: dict = {}
+    for m, j, ce in rows:
+        by_m.setdefault(int(m), []).append((int(j), list(ce)))
+    cb = {}
+    for m in sorted(by_m):
+        cells = sorted(by_m[m], key=lambda c: c[0])
+        cb[m] = (
+            np.array([j for j, _ in cells], dtype=np.int64),
+            np.array([ce for _, ce in cells], dtype=np.float64),
+        )
+    return cb
+
+
+def _seed_codebook(e: DataFrame, k: int, n_sub: int) -> dict:
+    """The codebook seeded from vec_id 1..k, each seed cut into ``n_sub``
+    equal subspaces; ``{}`` when no seed exists."""
+    import numpy as np
+
+    seeds = (
+        e.filter(F.col("vec_id").between(1, k))
+        .select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
+        .collect()
+    )
+    return _codebook(
+        (m, r["vec_id"], sub)
+        for r in seeds
+        for m, sub in enumerate(np.split(np.array(r["e"], dtype=np.float64), n_sub))
+    )
+
+
+def _lloyd_partials(body: DataFrame, cb: dict, key) -> DataFrame:
+    """One ``mapInArrow`` pass over ``body``'s ``e`` column: every
+    (vector, subspace) assigned to its nearest codebook row, and per batch
+    the PARTIAL SUMS ``(m, j, i, psum, pcount)`` of the members' HALF_UP
+    ``round(x * 1e6)`` — int64, so the sums are exact and
+    order-independent. A cell with no member in the batch emits no row:
+    empty cells DROP, as the oracle's GROUP BY over members drops them."""
+    import numpy as np
+    import pyarrow as pa
+
+    def partials(batches):
+        for b in batches:
+            if b.num_rows == 0:
+                continue
+            E = _batch_matrix(b)
+            scaled = _half_up_micro(E * 1e6)
+            cols: dict = {"m": [], "j": [], "i": [], "psum": [], "pcount": []}
+            for m, (ids, C) in cb.items():
+                K, w = C.shape
+                k = _nearest(E, m, ids, C, key)
+                psum = np.zeros((K, w), dtype=np.int64)
+                pcount = np.zeros(K, dtype=np.int64)
+                np.add.at(psum, k, scaled[:, m * w : (m + 1) * w])
+                np.add.at(pcount, k, 1)
+                keep = np.repeat(pcount > 0, w)
+                cols["m"].append(np.full(int(keep.sum()), m, dtype=np.int32))
+                cols["j"].append(np.repeat(ids, w)[keep])
+                cols["i"].append(np.tile(np.arange(w, dtype=np.int32), K)[keep])
+                cols["psum"].append(psum.reshape(-1)[keep])
+                cols["pcount"].append(np.repeat(pcount, w)[keep])
+            yield pa.record_batch(
+                [pa.array(np.concatenate(v)) for v in cols.values()], names=list(cols)
+            )
+
+    return body.mapInArrow(partials, "m int, j long, i int, psum long, pcount long")
+
+
+def _lloyd_means(part: DataFrame) -> DataFrame:
+    """``(m, j, ce)``: per (subspace, cell, dim) the members' mean
+    ``sum(psum) / sum(pcount) / 1e6`` — the oracle's division, done in
+    Spark — gathered into one dim-ordered array per cell."""
+    return (
+        part.groupBy("m", "j", "i")
+        .agg(((F.sum("psum").cast("double") / F.sum("pcount")) / 1000000).alias("c"))
+        .groupBy("m", "j")
+        .agg(
+            F.transform(
+                F.sort_array(F.collect_list(F.struct("i", "c"))), lambda s: s["c"]
+            ).alias("ce")
+        )
+    )
+
+
+def _lloyd(e: DataFrame, cb: dict, rounds: int, key) -> dict:
+    """``rounds`` Lloyd rounds of codebook ``cb`` over the ``embedding``
+    column of ``e``: assign with ``key``, then recompute every cell as its
+    members' micro-unit mean. A cell that loses every member leaves the
+    codebook."""
+    body = e.select(F.col("embedding").cast("array<double>").alias("e"))
+    for _ in range(rounds if cb else 0):
+        rows = _lloyd_means(_lloyd_partials(body, cb, key)).collect()
+        cb = _codebook((r["m"], r["j"], r["ce"]) for r in rows)
+    return cb
+
+
 def ivf_build_centroids(
     spark: SparkSession, sf_dir: str, e: DataFrame | None = None
 ) -> DataFrame:
@@ -378,91 +552,19 @@ def ivf_build_centroids(
     (what the oracle checks); ``bench.py`` times the stages separately as
     ``ivf_build`` / ``ivf_search``.
 
-    Round 17 (guide §4.2/§4.4 — Arrow-vectorize the N×K distance
-    kernel): each round is ONE ``mapInArrow`` pass that assigns every
-    vector to its nearest centroid in NumPy and emits per-batch PARTIAL
-    SUMS (cid, dim, psum, pcount) — K*D rows per batch instead of the
-    N*K-row broadcast-cross-join + min_by and the N*D-row posexplode
-    re-aggregation per round. The K-row centroid table rides the driver
-    between rounds (bounded metadata, the k-center pattern). A/B vs the
-    expression tower: 1.39 → 0.86 s at sf0.1, 2.35 → 1.05 s at the 10×
-    rehearsal (min-of-4 each), centroids BIT-IDENTICAL.
-
-    Exactness contract (what makes the kernel safe to swap in):
-    distances accumulate DIM-SEQUENTIALLY — ``acc += (x_d - c_d)^2`` in
-    dim order, the same IEEE op sequence as the old
-    ``aggregate(zip_with(...))`` left fold — so argmin ties break
-    identically (first index = smallest cid, matching min_by's
-    (dist, cid) struct order); member sums are int64 of the same
-    HALF_UP ``round(x*1e6)`` (order-independent) via ``_half_up_micro``,
-    which reproduces Java's BigDecimal(shortest-repr) rounding exactly; the final
-    sum/count/1e6 division happens in Spark in both forms."""
-    import numpy as np
-    import pyarrow as pa
-
+    The build is the Lloyd kernel (``_lloyd``) with ONE subspace as wide
+    as the vector, seeded from vec_id 1..K_CELLS, and the raw distance as
+    the argmin key (``_ivf_key``): ties go to the smallest cid, matching
+    ``min_by(cid, (dist, cid))``. Centroids are bit-identical to the
+    replaced expression tower (broadcast cross join + ``min_by`` +
+    posexplode re-aggregation per round), pinned by
+    ``test_arrow_lloyd_kernel_matches_expression_tower``."""
     if e is None:
         e = t(spark, sf_dir, "embeddings")
-    ed = e.select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
-    seeds = (
-        ed.filter(F.col("vec_id").between(1, K_CELLS))
-        .selectExpr("vec_id AS cid", "e AS ce")
-        .collect()
-    )
-    cents = sorted((r["cid"], list(r["ce"])) for r in seeds)
-    if not cents:
-        return spark.createDataFrame([], "cid bigint, ce array<double>")
-    body = ed.select("e")  # only the column the kernel needs crosses (§4.1)
-    for _ in range(LLOYD_ROUNDS):
-        cid_arr = np.array([c[0] for c in cents], dtype=np.int64)
-        C = np.array([c[1] for c in cents], dtype=np.float64)  # K x D
-
-        def partials(batches, C=C, cid_arr=cid_arr):
-            K, D = C.shape
-            cids = np.repeat(cid_arr, D)
-            dims = np.tile(np.arange(D, dtype=np.int64), K)
-            for b in batches:
-                if b.num_rows == 0:
-                    continue
-                E = np.stack(b.column("e").to_numpy(zero_copy_only=False))
-                acc = np.zeros((E.shape[0], K), dtype=np.float64)
-                for d in range(D):  # dim-sequential: the SQL fold's order
-                    diff = E[:, d, None] - C[None, :, d]
-                    acc += diff * diff
-                assign = np.argmin(acc, axis=1)
-                scaled = _half_up_micro(E * 1e6)
-                psum = np.zeros((K, D), dtype=np.int64)
-                pcount = np.zeros(K, dtype=np.int64)
-                np.add.at(psum, assign, scaled)
-                np.add.at(pcount, assign, 1)
-                mask = np.repeat(pcount > 0, D)  # empty cells DROP, as
-                # the old groupBy over members dropped them
-                yield pa.record_batch(
-                    {
-                        "cid": pa.array(cids[mask], pa.int64()),
-                        "dim": pa.array(dims[mask], pa.int64()),
-                        "psum": pa.array(psum.reshape(-1)[mask], pa.int64()),
-                        "pcount": pa.array(
-                            np.repeat(pcount, D)[mask], pa.int64()
-                        ),
-                    }
-                )
-
-        part = body.mapInArrow(
-            partials, "cid long, dim long, psum long, pcount long"
-        )
-        cent = part.groupBy("cid", "dim").agg(
-            (
-                (F.sum("psum").cast("double") / F.sum("pcount")) / 1000000
-            ).alias("c")
-        )
-        cent_arr = cent.groupBy("cid").agg(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("dim", "c"))), lambda s: s["c"]
-            ).alias("ce")
-        )
-        cents = sorted((r["cid"], list(r["ce"])) for r in cent_arr.collect())
+    cb = _lloyd(e, _seed_codebook(e, K_CELLS, 1), LLOYD_ROUNDS, _ivf_key)
     return spark.createDataFrame(
-        [(c, list(ce)) for c, ce in cents], "cid bigint, ce array<double>"
+        [(int(j), c.tolist()) for ids, C in cb.values() for j, c in zip(ids, C)],
+        "cid bigint, ce array<double>",
     )
 
 
@@ -675,12 +777,13 @@ def similarity_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Index build (LLOYD_ROUNDS k-means rounds, fully distributed):
       1. seed K=8 centroids deterministically (vec_id 1..8);
-      2. per round: assign every vector to its nearest centroid via a
-         broadcast cross join + ``min_by`` partial aggregation (map-side
-         combine, NO window sort — the N x K distance matrix never shuffles,
-         only (vec_id, argmin)), then recompute centroids as per-dimension
-         means in integer micro-units (exact, order-independent sums ->
-         bit-deterministic doubles; ties break on cid).
+      2. per round (``ivf_build_centroids``, the Lloyd kernel): assign
+         every vector to its nearest centroid in one ``mapInArrow`` pass
+         that emits per-batch partial sums (the N x K distance matrix
+         never leaves the batch), then recompute centroids as
+         per-dimension means in integer micro-units (exact,
+         order-independent sums -> bit-deterministic doubles; ties break
+         on cid).
     Query: probe the ``N_PROBE=2`` cells nearest the query vector and score
     candidates with the exact cosine — candidate set ~ 2N/K instead of N.
     At 100 TB the same plan holds: centroids stay a broadcast table (K rows),
@@ -807,204 +910,58 @@ def _sql_pq_search(rounds: int) -> str:
 )
 
 
-def _half_up_micro(V):
-    """int64 of Spark's ``ROUND(x, 0)`` (Java HALF_UP on the shortest
-    decimal repr) applied to an ndarray. A double's shortest repr is
-    exactly ``n.5`` only when the double equals n.5, so exact halves are
-    the only values where HALF_UP differs from ``np.rint``
-    (half-to-even): those round away from zero, everything else is
-    ``np.rint``. The half test runs on ``|V|`` — for
-    ``V = -0.49999999999999994``, ``V - floor(V)`` rounds to exactly 0.5.
-    The one copy of this rounding: the ivf_build_centroids Lloyd kernel
-    and the PQ refine/encode kernels all call it, pinned by the near-half
-    adversary gates.
-
-    NaN and ±Inf have no int64 value (the cast would turn NaN into
-    INT64_MIN, which then wins every argmin), so they raise ``ValueError``
-    instead."""
-    import numpy as np
-
-    if not np.isfinite(V).all():
-        raise ValueError(
-            "_half_up_micro: NaN or infinite input has no int64 micro-unit value"
-        )
-    A = np.abs(V)
-    half = A - np.floor(A) == 0.5
-    return np.where(half, np.copysign(np.floor(A) + 1, V), np.rint(V)).astype(np.int64)
-
-
 def _pq_codes(
     spark: SparkSession, sf_dir: str, rounds: int = 0, e: DataFrame | None = None
 ):
     """(codes, codebook, e): PQ-encode every vector.
 
-    Codebook = the PQ_K seed vectors sliced into PQ_M subvectors, then
-    ``rounds`` Lloyd refinements per subspace (assign by encoded argmin,
-    recompute per-dimension means in integer micro-units; empty cells
-    drop).
-
-    Round 17 (guide §4.2/§4.4 — the same Arrow treatment as
-    ivf_build_centroids): the M*K-row codebook rides the DRIVER between
-    rounds; each refinement round is ONE ``mapInArrow`` pass that assigns
-    every (vector, subspace) in NumPy and emits per-batch PARTIAL SUMS
-    (m, j, i, psum, pcount) — M*K*PQ_SUB rows per batch instead of the
-    N*M*K-row broadcast-join distance relation plus the N*M*PQ_SUB-row
-    posexplode re-aggregation; the final encode is one more ``mapInArrow``
-    pass emitting the (vec_id, m, code) triples the consumers join/write.
-
-    Exactness contract (what makes the kernel swap-safe, mirroring the
-    ivf kernel's): subspace distances accumulate DIM-SEQUENTIALLY (the
-    ``aggregate(zip_with(...))`` left fold's IEEE op order); the argmin
-    key is the same BIGINT encoding ``HALF_UP(dist * 1e6) * 16 + j`` the
-    replaced ``MIN`` aggregated — Java's shortest-repr HALF_UP on the
-    DISTANCE value reproduced by ``_half_up_micro`` (a second rounding
-    layer on top of the member-value rounding, both replayed by the
-    oracle); member sums are int64 of ``HALF_UP(x * 1e6)``
-    (order-independent), and the final sum/count/1e6 division happens in
-    Spark. Pinned bit-for-bit against the retained expression tower by
+    The codebook is the Lloyd kernel (``_lloyd``) with PQ_M subspaces of
+    PQ_SUB dims: the PQ_K seed vectors sliced into subvectors, then
+    ``rounds`` refinements. Its argmin key is the BIGINT
+    ``HALF_UP(dist * 1e6) * 16 + j`` (``_pq_key``) whose ``MIN`` the
+    oracle takes — a second HALF_UP layer, on the distance, above the one
+    on member values. The final encode is one more ``mapInArrow`` pass with
+    the same fold and key, emitting the (vec_id, m, code) triples the
+    consumers join/write. Codes and refined codebook are bit-identical to
+    the replaced expression tower, pinned by
     ``test_arrow_pq_kernel_matches_expression_tower``."""
     import numpy as np
     import pyarrow as pa
 
     if e is None:
         e = t(spark, sf_dir, "embeddings")
-    emb_d = F.col("embedding").cast("array<double>")
-    seeds = (
-        e.filter(F.col("vec_id").between(1, PQ_K))
-        .select(F.col("vec_id").alias("j"), emb_d.alias("emb"))
-        .collect()
-    )
-    # cb_rows: per subspace m, the sorted [(j, ce)] codebook — bounded
-    # M*K-row metadata carried on the driver (the k-center pattern)
-    cb_rows = {
-        m: sorted(
-            (int(r["j"]), list(r["emb"])[m * PQ_SUB : (m + 1) * PQ_SUB])
-            for r in seeds
-        )
-        for m in range(PQ_M)
-    }
-    if not seeds:
+    cb = _lloyd(e, _seed_codebook(e, PQ_K, PQ_M), rounds, _pq_key)
+    if not cb:
         codes = spark.createDataFrame([], "vec_id bigint, m int, code bigint")
-        cb = spark.createDataFrame([], "m int, j bigint, ce array<double>")
-        return codes, cb, e
-    body = e.select("vec_id", emb_d.alias("e"))
+        cbdf = spark.createDataFrame([], "m int, j bigint, ce array<double>")
+        return codes, cbdf, e
 
-    def _np_cb(cb_rows):
-        # per-subspace (j ids, K_m x PQ_SUB centroid matrix) — K_m can
-        # shrink across rounds as cells empty out
-        return {
-            m: (
-                np.array([j for j, _ in rows], dtype=np.int64),
-                np.array([ce for _, ce in rows], dtype=np.float64),
-            )
-            for m, rows in cb_rows.items()
-            if rows
-        }
-
-    def _assign(E, jm, Cm, m):
-        # E: n x EMB_DIM batch; subspace slice vs K_m x PQ_SUB codebook.
-        # Dim-sequential accumulation = the SQL fold's IEEE op order.
-        S = E[:, m * PQ_SUB : (m + 1) * PQ_SUB]
-        acc = np.zeros((E.shape[0], Cm.shape[0]), dtype=np.float64)
-        for d in range(PQ_SUB):
-            diff = S[:, d, None] - Cm[None, :, d]
-            acc += diff * diff
-        enc = _half_up_micro(acc * 1e6) * 16 + jm[None, :]
-        return np.argmin(enc, axis=1)
-
-    for _ in range(rounds):
-        npcb = _np_cb(cb_rows)
-
-        def partials(batches, npcb=npcb):
-            for b in batches:
-                if b.num_rows == 0:
-                    continue
-                E = np.stack(b.column("e").to_numpy(zero_copy_only=False))
-                scaled = _half_up_micro(E * 1e6)
-                out_m, out_j, out_i, out_s, out_c = [], [], [], [], []
-                for m, (jm, Cm) in npcb.items():
-                    k = _assign(E, jm, Cm, m)
-                    K = jm.shape[0]
-                    psum = np.zeros((K, PQ_SUB), dtype=np.int64)
-                    pcount = np.zeros(K, dtype=np.int64)
-                    np.add.at(
-                        psum, k, scaled[:, m * PQ_SUB : (m + 1) * PQ_SUB]
-                    )
-                    np.add.at(pcount, k, 1)
-                    mask = np.repeat(pcount > 0, PQ_SUB)  # empty cells DROP
-                    out_m.append(np.full(int(mask.sum()), m, dtype=np.int32))
-                    out_j.append(np.repeat(jm, PQ_SUB)[mask])
-                    out_i.append(
-                        np.tile(np.arange(PQ_SUB, dtype=np.int32), K)[mask]
-                    )
-                    out_s.append(psum.reshape(-1)[mask])
-                    out_c.append(np.repeat(pcount, PQ_SUB)[mask])
-                yield pa.record_batch(
-                    {
-                        "m": pa.array(np.concatenate(out_m), pa.int32()),
-                        "j": pa.array(np.concatenate(out_j), pa.int64()),
-                        "i": pa.array(np.concatenate(out_i), pa.int32()),
-                        "psum": pa.array(np.concatenate(out_s), pa.int64()),
-                        "pcount": pa.array(np.concatenate(out_c), pa.int64()),
-                    }
-                )
-
-        part = body.select("e").mapInArrow(
-            partials, "m int, j long, i int, psum long, pcount long"
-        )
-        # the sum/count/1e6 division happens in Spark, as in the old form
-        cbm = (
-            part.groupBy("m", "j", "i")
-            .agg(
-                (
-                    (F.sum("psum").cast("double") / F.sum("pcount")) / 1000000
-                ).alias("c")
-            )
-            .groupBy("m", "j")
-            .agg(
-                F.transform(
-                    F.sort_array(F.collect_list(F.struct("i", "c"))),
-                    lambda s: s["c"],
-                ).alias("ce")
-            )
-        )
-        cb_rows = {m: [] for m in range(PQ_M)}
-        for r in cbm.collect():
-            cb_rows[r["m"]].append((int(r["j"]), list(r["ce"])))
-        for m in cb_rows:
-            cb_rows[m].sort()
-    npcb = _np_cb(cb_rows)
-
-    def encode(batches, npcb=npcb):
+    def encode(batches):
+        ms = np.array(list(cb), dtype=np.int32)
         for b in batches:
             if b.num_rows == 0:
                 continue
-            vids = b.column("vec_id").to_numpy(zero_copy_only=False).astype(
-                np.int64
+            vids = b.column("vec_id").to_numpy(zero_copy_only=False).astype(np.int64)
+            E = _batch_matrix(b)
+            codes = np.stack(
+                [ids[_nearest(E, m, ids, C, _pq_key)] for m, (ids, C) in cb.items()],
+                axis=1,
             )
-            E = np.stack(b.column("e").to_numpy(zero_copy_only=False))
-            n = E.shape[0]
-            ms = sorted(npcb)
-            codes = np.empty((n, len(ms)), dtype=np.int64)
-            for c, m in enumerate(ms):
-                jm, Cm = npcb[m]
-                codes[:, c] = jm[_assign(E, jm, Cm, m)]
             yield pa.record_batch(
                 {
                     "vec_id": pa.array(np.repeat(vids, len(ms)), pa.int64()),
-                    "m": pa.array(
-                        np.tile(np.array(ms, dtype=np.int32), n), pa.int32()
-                    ),
+                    "m": pa.array(np.tile(ms, len(vids)), pa.int32()),
                     "code": pa.array(codes.reshape(-1), pa.int64()),
                 }
             )
 
+    body = e.select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
     codes = body.mapInArrow(encode, "vec_id long, m int, code long")
-    cb = spark.createDataFrame(
-        [(m, j, ce) for m in sorted(cb_rows) for j, ce in cb_rows[m]],
+    cbdf = spark.createDataFrame(
+        [(m, int(j), c.tolist()) for m, (ids, C) in cb.items() for j, c in zip(ids, C)],
         "m int, j bigint, ce array<double>",
     )
-    return codes, cb, e
+    return codes, cbdf, e
 
 
 @register("vector_pq_codes", oracle=_sql_pq_codes(0))
@@ -1012,10 +969,10 @@ def vector_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ encode: every 64-dim vector compressed to PQ_M=8 codebook indices
     (8 bytes/vector instead of 256 — the memory step that makes
     billion-vector search fit a cluster). Static codebook from the PQ_K
-    seed vectors, carried on the driver; one ``mapInArrow`` pass assigns
-    every (vector, subspace) in NumPy by the integer argmin key
-    ``HALF_UP(dist * 1e6) * 16 + j`` (``_pq_codes``) — deterministic, so
-    DuckDB replays it exactly."""
+    seed vectors (the Lloyd kernel with zero rounds), carried on the
+    driver; one ``mapInArrow`` pass assigns every (vector, subspace) in
+    NumPy by the integer argmin key ``HALF_UP(dist * 1e6) * 16 + j``
+    (``_pq_codes``) — deterministic, so DuckDB replays it exactly."""
     codes, _, _ = _pq_codes(spark, sf_dir)
     return codes.groupBy("vec_id").agg(
         F.transform(
@@ -1095,8 +1052,9 @@ def similarity_topk_pq_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
     per subspace (assign -> per-dimension micro-unit means) before
     encoding — the production index-build step that recovers quantization
     error the static seed codebook leaves on the table. Same ADC search
-    plan; only the codebook build deepens (each round is a broadcast
-    distance join + two partial aggregations, embarrassingly parallel).
+    plan; only the codebook build deepens (each round is one Lloyd-kernel
+    ``mapInArrow`` pass plus two partial aggregations, embarrassingly
+    parallel).
     The oracle is GENERATED for the same round count (``_sql_pq_common``),
     so the driver hash covers the iterated build."""
     return _pq_search(spark, sf_dir, rounds=1)

@@ -214,7 +214,7 @@ def read_parquet_logs(spark, options: dict) -> DataFrame:
     pushes WHERE clauses into its own scan, partitions follow file splits,
     and Spark retries I/O itself."""
     o = _Options.parse(options)
-    hi = o.to_block if o.to_block is not None else _chain_head(o.path)
+    hi = o.to_block if o.to_block is not None else _block_bounds(o.path)[1]
     df = spark.read.schema(_stored_schema(o.path)).parquet(o.path).select(
         *[F.col(f.name).cast(f.dataType).alias(f.name) for f in ETH_LOG_SCHEMA.fields]
     )
@@ -300,10 +300,10 @@ def _chunks(
     ]
 
 
-def _chain_head(path: str) -> int:
-    """max(block_number) from the row-group statistics of every file of
-    the table (no data scan); ``path`` is one parquet file or a directory
-    of them."""
+def _block_bounds(path: str) -> tuple[int, int]:
+    """(first, last) block_number of the table from the row-group
+    statistics of every file (no data scan); ``path`` is one parquet file
+    or a directory of them."""
     import pyarrow.compute as pc
     import pyarrow.dataset as ds
 
@@ -314,8 +314,9 @@ def _chain_head(path: str) -> int:
         for rg in frag.row_groups
     ]
     if not stats or None in stats:  # stats missing: scan the one column
-        return int(pc.max(dataset.to_table(columns=["block_number"])[0]).as_py())
-    return int(max(st["max"] for st in stats))
+        mm = pc.min_max(dataset.to_table(columns=["block_number"])[0])
+        return int(mm["min"].as_py()), int(mm["max"].as_py())
+    return int(min(st["min"] for st in stats)), int(max(st["max"] for st in stats))
 
 
 def _stored_schema(path: str) -> StructType:
@@ -336,7 +337,19 @@ def _head_of(o: _Options) -> int:
     stats (the test stand-in) or a live eth_blockNumber call (S5)."""
     if o.rpc_url is not None:
         return JsonRpcLogFetcher(o.rpc_url).block_number()
-    return _chain_head(o.path)
+    return _block_bounds(o.path)[1]
+
+
+def _start_of(o: _Options) -> int:
+    """The first block to read: ``from_block``, raised on parquet to the
+    start of the ``block_step`` chunk that holds the table's first block.
+    A read from the default 0 then cuts no chunk wholly below the table,
+    and every other chunk keeps its bounds. A JSON-RPC node keeps
+    ``from_block``: genesis is a real range there."""
+    if o.rpc_url is not None:
+        return o.from_block
+    first = _block_bounds(o.path)[0]
+    return max(o.from_block, first - first % o.block_step)
 
 
 def _fetch_table(path: str, flt: list) -> pa.Table:
@@ -502,11 +515,11 @@ class _EthLogReader:
 class EthLogStreamReader(_EthLogReader, DataSourceStreamReader):
     def __init__(self, options: dict):
         super().__init__(options)
-        self._current = self.opts.from_block
+        self._start = self._current = _start_of(self.opts)
 
     # offsets are dicts {"block": next_unread_block}
     def initialOffset(self) -> dict:
-        return {"block": self.opts.from_block}
+        return {"block": self._start}
 
     def latestOffset(self) -> dict:
         o = self.opts
@@ -600,7 +613,7 @@ class EthLogBatchReader(_EthLogReader, DataSourceReader):
         # pushed predicates can narrow the range to empty (e.g.
         # block_number = 5 with from_block = 10): _chunks returns the sentinel
         hi = (to_b if to_b is not None else _head_of(o)) + 1
-        return _chunks(lo, hi, o.block_step, addr, addr_exact)
+        return _chunks(max(lo, _start_of(o)), hi, o.block_step, addr, addr_exact)
 
 
 class EthLogDataSource(DataSource):

@@ -582,7 +582,7 @@ def _lloyd_reference_expression(spark, e):
     return cent_arr
 
 
-@pytest.mark.parametrize("case", ["fixture", "empty_cell", "near_half"])
+@pytest.mark.parametrize("case", ["fixture", "empty_cell", "near_half", "tie"])
 def test_arrow_lloyd_kernel_matches_expression_tower(spark, sf_dir, case):
     """Round-17 gate for the Arrow-vectorized Lloyd kernel: centroids must
     be BIT-IDENTICAL to the replaced expression tower — including the
@@ -602,6 +602,14 @@ def test_arrow_lloyd_kernel_matches_expression_tower(spark, sf_dir, case):
             (100, [500.0, 500.0]),
             (101, [0.002, 0.0]),
         ]
+        e = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    elif case == "tie":
+        # seeds 2 and 3 are IDENTICAL, so every distance to them ties and
+        # the smallest cid must win, as min_by's (dist, cid) order does:
+        # cell 3 gets no member and drops
+        rows = [(i, [0.5 if i == 3 else 0.25 * i, 1.0]) for i in range(1, 9)]
+        rows += [(100 + i, [0.5 + 0.01 * i, 1.0]) for i in range(4)]
+        assert rows[1][1] == rows[2][1]  # 2 and 3 collide
         e = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     else:
         # components whose *1e6 lands exactly on k + 0.5 in float64 — the
@@ -701,7 +709,8 @@ def _pq_reference_expression(spark, e, rounds):
 
 
 @pytest.mark.parametrize("case,rounds", [
-    ("fixture", 0), ("fixture", 1), ("empty_cell", 1), ("near_half", 1),
+    ("fixture", 0), ("fixture", 1), ("fixture", 2), ("empty_cell", 1),
+    ("near_half", 1),
 ])
 def test_arrow_pq_kernel_matches_expression_tower(spark, sf_dir, case, rounds):
     """Round-17 gate for the Arrow-vectorized PQ build: the (vec_id, m,

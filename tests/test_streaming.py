@@ -1251,6 +1251,13 @@ def test_batch_partitions_align_to_block_step(eth_logs_fixture):
         {"block": fx.from_block}, {"block": fx.to_block + 1}
     )
     assert [(p.lo, p.hi) for p in stream] == bounds
+    # no from_block: the read starts in the chunk that holds the table's
+    # first block, not at block 0, and cuts the same chunks from there
+    del opts["from_block"]
+    start = min(r["block_number"] for r in fx.rows) // 20 * 20
+    parts = bs.EthLogBatchReader(opts).partitions()
+    assert [(p.lo, p.hi) for p in parts] == [(start, bounds[0][1]), *bounds[1:]]
+    assert bs.EthLogStreamReader(opts).initialOffset() == {"block": start}
 
 
 def test_batch_empty_pushed_range_end_to_end(source_registered, tmp_path):
