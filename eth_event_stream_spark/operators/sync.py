@@ -10,22 +10,23 @@ in total (block, log_index) order (sink.rs:216-249, sort at 117-119).
 Spark already has the physical pieces (shuffle sort, state store, watermarks);
 what this module provides is the *semantics* as composable DataFrame ops:
 
-- ``tag_signature``      — S8 fan-in: tag rows with their stream signature.
-- ``dedup_logs``         — B4 idempotent upsert == dropDuplicates on the key.
+- ``tag_signature``      — S8 fan-in: tag rows with their stream signature;
+  the ``sig`` column's metadata lists the registered ones.
 - ``watermark_block``    — B2/B3 min-of-max frontier from per-source
   punctuation (offset-based, not data-based — SURVEY §7.4.5): the port of
   sink.rs's test_up_to. The live path needs no call to it: a
   ``StreamFactory`` reads all its streams through one source, whose one
   offset is that frontier.
-- ``flush_including``    — B6 dense flush: block-spine join so empty blocks
-  emit empty lists.
+- ``flush_including``    — B6 dense flush: a spine of blocks x registered
+  sigs, so empty blocks and streams with no logs emit empty lists.
 - ``synced_events``      — B9 N-way merge to total order.
 - ``block_batches``      — B7 tumbling count-windows over block height.
 
-Scale notes: everything shuffles at most once on block_number (or not at all —
-sort within partitions after a range repartition); the spine join broadcasts
-the generated spine when small and is a range-partitioned join otherwise; no
-driver-side loops.
+Scale notes: the flush scans its input once and shuffles it once, on
+(block_number, sig); the generated spine joins the groups by broadcast, or
+by one shuffle of the spine when they are large. The B4 upsert is the
+factory read's, with its own shuffle. ``synced_events`` sorts within
+partitions after a range repartition. No driver-side loops.
 """
 
 from __future__ import annotations
@@ -43,19 +44,12 @@ def signature_col(address: Column | None = None, topic0: Column | None = None) -
     return F.concat_ws("|", F.lower(address), F.lower(topic0))
 
 
-def tag_signature(df: DataFrame) -> DataFrame:
-    """Tag rows with their stream signature. Keeping only the registered
-    streams (stream.rs:79-81) is the ``eth_logs`` read's job: its
-    ``streams`` option."""
-    return df.withColumn("sig", signature_col())
-
-
-def dedup_logs(df: DataFrame) -> DataFrame:
-    """Idempotent upsert (B4, sink.rs:280-296): same (sig, block, log_index)
-    keeps one row. log_index is block-unique on-chain, so (block, log_index)
-    alone is the physical key; sig is included for safety with synthetic data.
-    """
-    return df.dropDuplicates(["sig", "block_number", "log_index"])
+def tag_signature(df: DataFrame, sigs: list[str]) -> DataFrame:
+    """Tag rows with their stream signature, and list the registered
+    ``sigs`` in the ``sig`` column's metadata for ``flush_including``.
+    Keeping only the registered streams (stream.rs:79-81) is the
+    ``eth_logs`` read's job: its ``streams`` option."""
+    return df.withColumn("sig", signature_col()).withMetadata("sig", {"sigs": sigs})
 
 
 def watermark_block(punctuation: dict[str, int] | DataFrame, n_sources: int | None = None):
@@ -99,15 +93,18 @@ def flush_including(
     """B6+B8: dense per-(block, sig) flush of [bottom, target].
 
     Emits one row per (block, sig) for EVERY block in range and every
-    registered sig present in ``df`` — empty (block, sig) groups emit an empty
-    ``events`` array (sink.rs:237-241) — with events sorted by log_index.
+    registered sig (the ``sig`` metadata ``tag_signature`` writes; without
+    it, ``ValueError``) — empty groups, a stream with no logs included, emit
+    an empty ``events`` array (sink.rs:237-241) — events sorted by log_index.
 
     The result is the batch shape of ``StreamSinkFlush``:
     (block_number, sig, events: array<struct>). Catalyst plan: one shuffle on
-    (block, sig) for the aggregation, then a broadcast join against the tiny
-    (spine x sigs) frame.
+    (block, sig) for the aggregation, left-joined from the generated spine
+    of blocks x registered sigs.
     """
-    spark = df.sparkSession
+    sigs = df.schema["sig"].metadata.get("sigs")
+    if sigs is None:
+        raise ValueError("flush_including needs the registered sigs: tag the frame with tag_signature")
     if payload_cols is None:
         payload_cols = [c for c in df.columns if c not in ("sig", "block_number")]
     in_range = df.filter(
@@ -118,17 +115,13 @@ def flush_including(
             F.collect_list(F.struct(F.col("log_index"), *[F.col(c) for c in payload_cols]))
         ).alias("events")
     )
-    spine = block_spine(spark, bottom, target)
-    sigs = df.select("sig").distinct()
-    dense = spine.crossJoin(F.broadcast(sigs))
-    out = (
-        dense.join(grouped, ["block_number", "sig"], "left")
-        .withColumn(
-            "events",
-            F.coalesce(F.col("events"), F.array().cast(grouped.schema["events"].dataType)),
-        )
+    dense = block_spine(df.sparkSession, bottom, target).select(
+        "block_number", F.explode(F.array(*[F.lit(s) for s in sigs])).alias("sig")
     )
-    return out
+    return dense.join(grouped, ["block_number", "sig"], "left").withColumn(
+        "events",
+        F.coalesce(F.col("events"), F.array().cast(grouped.schema["events"].dataType)),
+    )
 
 
 def synced_events(df: DataFrame, per_block: bool = False) -> DataFrame:

@@ -7,13 +7,16 @@ stream into a shared sink; consumers read block-aligned merged batches.
 
 Spark shape: ``sink()`` is ONE ``eth_logs`` read of every registered
 ``(address, topic0)`` pair (the ``streams`` option) tagged with each row's
-stream signature by ``operators.sync.tag_signature`` — the S8 fan-in. The
-read itself is the Sink's idempotent upsert (B4): each ``(sig, block,
-log_index)`` comes back once. As a stream it is one source with one offset,
-so each trigger makes one head call and each micro-batch covers one block
-range ``[start, end)`` for every stream: the reference's
-min-of-per-source-maxima watermark (B2, sink.rs:187-197) holds by
-construction, and no streaming dedup state is kept.
+stream signature by ``operators.sync.tag_signature`` — the S8 fan-in —
+whose ``sig`` metadata lists every ``make()`` signature through filters,
+``persist()`` and micro-batches, so ``flush_including`` emits each
+registered stream, one with no logs included. The read itself is the
+Sink's idempotent upsert (B4): each ``(sig, block, log_index)`` comes back
+once. As a stream it is one source with one offset, so each trigger makes
+one head call and each micro-batch covers one block range ``[start, end)``
+for every stream: the reference's min-of-per-source-maxima watermark (B2,
+sink.rs:187-197) holds by construction, and no streaming dedup state is
+kept.
 
 The same options serve ``spark.read`` (historical drain) and
 ``spark.readStream`` (live tail), the unified API the reference sells
@@ -84,8 +87,9 @@ class StreamFactory:
     def sink(self, streaming: bool = False, fail_on_removed: bool = True) -> DataFrame:
         """The shared sink's input: one read of every registered stream,
         each (sig, block, log_index) once — the B4 idempotent upsert — and
-        tagged with ``sig``. Downstream consumers apply the operators.sync
-        surface (dense flush, total order) or decode_event per signature."""
+        tagged with ``sig`` (its metadata lists the registered signatures).
+        Downstream consumers apply the operators.sync surface (dense flush,
+        total order) or decode_event per signature."""
         if not self.streams:
             raise ValueError("no streams registered — call make() first")
         opts = {
@@ -106,4 +110,4 @@ class StreamFactory:
         else:
             reader = self.spark.readStream if streaming else self.spark.read
             df = reader.format("eth_logs").options(**opts).load()
-        return tag_signature(df)
+        return tag_signature(df, [h.signature for h in self.streams])

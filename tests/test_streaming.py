@@ -1561,6 +1561,29 @@ def test_factory_batch_sink_scans_once(spark, eth_logs_fixture):
     assert not re.search(PYTHON_PLAN_NODE, plan), plan
 
 
+def test_factory_sink_flush_scans_once(spark, eth_logs_fixture):
+    """The dense flush of a batch sink takes its streams from the factory's
+    registrations: its final plan holds one parquet scan, no nested-loop
+    join, no Python or ``ExistingRDD`` node and at most two hash
+    exchanges (the upsert's and the flush's grouping)."""
+    from eth_event_stream_spark.operators.sync import flush_including
+    from eth_event_stream_spark.sources.factory import StreamFactory
+    from eth_event_stream_spark.sources.fixtures import ADDR_B, TRANSFER_DECL
+
+    fx, path = eth_logs_fixture
+    factory = StreamFactory(spark, path=path, from_block=fx.from_block, to_block=fx.to_block)
+    factory.make(ADDR_A, TRANSFER_DECL)
+    factory.make(ADDR_B, TRANSFER_DECL)
+    flushed = flush_including(factory.sink(fail_on_removed=False), fx.from_block, fx.to_block)
+    assert len(flushed.collect()) == (fx.to_block - fx.from_block + 1) * 2
+    plan = flushed._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("FileScan parquet") == 1, plan
+    assert "BroadcastNestedLoopJoin" not in final, plan
+    assert not re.search(PYTHON_PLAN_NODE + "|ExistingRDD", final), plan
+    assert final.count("Exchange hashpartitioning") <= 2, plan
+
+
 def test_factory_stream_keeps_only_reducer_state(spark, eth_logs_fixture, tmp_path):
     """A tail of a two-stream factory sink into the lowered netflow keeps
     one state store, the reducer's aggregate, holding one row per key: the
